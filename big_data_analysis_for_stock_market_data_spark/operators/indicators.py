@@ -338,7 +338,14 @@ def _recursive_apply(
     (REPARTITION_BY_NUM): AQE's byte-based coalescing would otherwise shrink
     a small-but-CPU-heavy Python stage to a couple of tasks (observed 3
     tasks on 32 cores — the bytes are tiny, the compute is not). The groupBy
-    reuses this hash partitioning, so no second exchange appears."""
+    reuses this hash partitioning, so no second exchange appears.
+
+    Spark drops this repartition as redundant when the input is already
+    hash-partitioned on the key into the same count — e.g. by a window
+    on the key upstream. The pass then runs behind that upstream
+    exchange: a REPARTITION_BY_NUM one keeps the pin (``stock.
+    feature_frame`` repartitions its raw bars for exactly this), while a
+    window's ENSURE_REQUIREMENTS one stays open to AQE coalescing."""
     if isinstance(partition_by, str):
         partition_by = [partition_by]
     from big_data_analysis_for_stock_market_data_spark.operators.windows import (
@@ -720,11 +727,17 @@ def recursive_enrich(
     cci_ns: Sequence[int] = (),
     engine: str = "sequential",
     cuts: "list[float] | None" = None,
+    closed_form: bool = False,
 ) -> DataFrame:
     """ALL recursive indicators in ONE applyInPandas pass — one shuffle on
     the symbol key instead of one per indicator family. This is the form
     ``enrich_ohlcv`` uses; the standalone functions above exist for à-la-
     carte use and for testing each recurrence in isolation.
+
+    ``closed_form``: also emit the closed-form block (CLOSED_FORM_COLS,
+    the ``_closed_form_pandas`` twin of the window expressions) from the
+    same Python pass, so the composite surface costs one pass over the
+    rows instead of two. Requires high/low/volume columns.
 
     APO_{a,b} = EMA_a - EMA_b (absolute price oscillator; MACD with
     arbitrary spans); PPO_{a,b} = 100·(EMA_a - EMA_b)/EMA_b (the percentage
@@ -738,8 +751,9 @@ def recursive_enrich(
 
     ``engine``: 'sequential' (default) = the bit-exact per-key pandas
     fold described above, parallelism |keys|; 'scan' = the block-parallel
-    affine-scan twin (``windows.recursive_scan_enrich`` + an
-    overlap-bucket CCI pass), parallelism rows/buckets, numerically
+    affine-scan twin (``windows.recursive_scan_enrich`` + one
+    overlap-bucket pass for CCI and the closed-form block), parallelism
+    rows/buckets, numerically
     equivalent at rtol ~1e-12 but NOT bit-identical; 'auto' = one
     keys-only aggregate probe, then 'scan' iff |keys| ≤ cores/4 AND the
     deepest key exceeds the measured crossover (SCAN_MIN_ROWS_PER_KEY —
@@ -751,7 +765,12 @@ def recursive_enrich(
     linear_recurrence sketches its own, re-executing upstream lineage)."""
     import numpy as np
 
+    if closed_form and not all(c in df.columns for c in ("high", "low", "volume")):
+        raise ValueError("closed_form=True needs high, low and volume columns")
     new_cols: dict[str, T.DataType] = {}
+    if closed_form:
+        for c in CLOSED_FORM_COLS:
+            new_cols[c] = T.DoubleType()
     for n in ema_spans:
         new_cols[f"ema{n}"] = T.DoubleType()
     for a, b in macd_pairs:
@@ -791,15 +810,27 @@ def recursive_enrich(
         )
 
         d = df
-        if has_ohlc and cci_ns:
-            # CCI is bounded-lookback (not recursive): the overlap-bucket
-            # pandas pass keeps within-key parallelism. Runs FIRST, on the
-            # raw frame, so its cut-point sketch stays cheap.
+        block_ns = tuple(cci_ns) if has_ohlc else ()
+        block_cols = [
+            *(CLOSED_FORM_COLS if closed_form else ()),
+            *(f"cci{n}" for n in block_ns),
+        ]
+        if block_cols:
+            # CCI and the closed-form block are bounded-lookback (not
+            # recursive): ONE overlap-bucket pandas pass computes both and
+            # keeps within-key parallelism. Runs FIRST, on the raw frame,
+            # so its cut-point sketch stays cheap.
+            def block(pdf: pd.DataFrame) -> pd.DataFrame:
+                if closed_form:
+                    pdf = _closed_form_pandas(pdf)
+                return _cci_pandas_block(pdf, block_ns, col)
+
             d = rolling_apply_parallel(
-                d,
-                lambda pdf: _cci_pandas_block(pdf, cci_ns, col),
-                {f"cci{n}": T.DoubleType() for n in cci_ns},
-                lookback=max(cci_ns) - 1,
+                d, block, dict.fromkeys(block_cols, T.DoubleType()),
+                lookback=max(
+                    CLOSED_FORM_LOOKBACK if closed_form else 0,
+                    max(block_ns, default=1) - 1,
+                ),
                 order_by=order_by, partition_by=keys, cuts=cuts,
             )
         d = recursive_scan_enrich(
@@ -815,6 +846,8 @@ def recursive_enrich(
         )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        if closed_form:
+            pdf = _closed_form_pandas(pdf)
         x = pdf[col]
         emas: dict[int, pd.Series] = {}
 
@@ -876,8 +909,9 @@ def recursive_enrich(
 
 
 # ---------------------------------------------------------------------------
-# Composite enrichment: the reference's full indicator surface in two passes
-# (one window projection + one applyInPandas), instead of its 11 sequential
+# Composite enrichment: the reference's full indicator surface in ONE Python
+# pass (closed-form block, CCI and the recursive family together, behind one
+# exchange on the partition key), instead of its 11 sequential
 # compute-aside-join stages (G_2_rf_nordd_fe.py:47-313).
 # ---------------------------------------------------------------------------
 
@@ -975,21 +1009,27 @@ def enrich_ohlcv(
 ) -> DataFrame:
     """Compute the reference schema's indicator families natively from OHLCV.
 
-    engine='expr': closed-form indicators as JVM window expressions sharing
-    one shuffle per partition key — fully parallel across MANY keys, but a
-    single key's history runs in one task.
-    engine='parallel' (default): closed-form block as a vectorized pandas
-    pass over overlap-buckets (``windows.rolling_apply_parallel``) — exact
-    (dependence bounded by CLOSED_FORM_LOOKBACK) and parallel WITHIN a key,
-    the right shape for few-symbols-deep-history data (the reference's is
-    ONE symbol).
     The recursive family (EMA/MACD/RSI/KAMA/ADX + vectorized CCI) runs
     through ``recursive_enrich`` with ``recursive_engine`` ('auto' by
-    default: the block-parallel affine scan when |keys| ≪ cores — the
-    reference's 4-symbol shape, where the sequential pandas fold
-    serializes — else the bit-exact sequential pass)."""
+    default: the block-parallel scan when few keys hold deep series —
+    see ``_keyspace_is_degenerate`` — else the bit-exact sequential
+    per-key pass).
+
+    engine='parallel' (default): the closed-form block is the vectorized
+    pandas twin ``_closed_form_pandas``, computed INSIDE that same Python
+    pass — one pass over the rows, one exchange on the partition key. Its
+    parallelism is therefore the recursive engine's: |keys| under
+    'sequential', rows/buckets under 'scan' (there the overlap-bucket
+    pass carries the block with lookback CLOSED_FORM_LOOKBACK, exact at
+    bucket boundaries).
+    engine='expr': closed-form indicators as JVM window expressions sharing
+    one shuffle per partition key — fully parallel across MANY keys, but a
+    single key's history runs in one task; the Python pass then carries
+    the recursive family only."""
+    if engine not in ("expr", "parallel"):
+        raise ValueError(f"engine must be 'expr' or 'parallel', got {engine!r}")
+    d = df
     if engine == "expr":
-        d = df
         for n in (5, 10, 15, 20):
             d = sma(d, n, partition_by, order_by)
         for n in (5, 10, 20):
@@ -1005,22 +1045,10 @@ def enrich_ohlcv(
         d = atr_sma(d, 14, partition_by, order_by)
         d = mfi(d, 14, partition_by, order_by)
         d = ultosc(d, 7, 14, 28, partition_by, order_by)
-    elif engine == "parallel":
-        from big_data_analysis_for_stock_market_data_spark.operators.windows import (
-            rolling_apply_parallel,
-        )
-
-        d = rolling_apply_parallel(
-            df, _closed_form_pandas,
-            {c: T.DoubleType() for c in CLOSED_FORM_COLS},
-            lookback=CLOSED_FORM_LOOKBACK,
-            order_by=order_by, partition_by=partition_by, cuts=cuts,
-        )
-    else:
-        raise ValueError(f"engine must be 'expr' or 'parallel', got {engine!r}")
-    # single applyInPandas pass for the recursive family + CCI (CCI is
+    # single Python pass for the recursive family + CCI (CCI is
     # closed-form but ~10x cheaper vectorized than as collect_list frames)
-    d = recursive_enrich(
+    # + the closed-form block under engine='parallel'
+    return recursive_enrich(
         d, partition_by, order_by,
         ema_spans=(5, 10, 15, 20),
         macd_pairs=((5, 10), (5, 20), (10, 20), (15, 20), (12, 26)),
@@ -1032,8 +1060,8 @@ def enrich_ohlcv(
         cci_ns=(5, 10, 15),
         engine=recursive_engine,
         cuts=cuts,
+        closed_form=engine == "parallel",
     )
-    return d
 
 
 # ---------------------------------------------------------------------------

@@ -17560,6 +17560,13 @@ _WINDOW_PRIORITY: tuple[str, ...] = (
     # re-queues above — text_chunk_overlap / text_curate_gate /
     # text_pack_sequences / text_redact_pii / text_rolling_fingerprint
     # defer to r12).
+    # Later re-queues: the eight r12-stale mm_* decode entries, the two
+    # entries the one-Python-pass stock change reaches (ind_parabolic_sar,
+    # ts_holt_linear) and the r12-rewritten text_unigram_logprob take
+    # slots after the r11 re-queues; they displace eleven refresh entries
+    # (stock_fixture_daily_label, the eight stream_* entries,
+    # w1_lag_label_parity, simsearch_pq_topk), which defer to the next
+    # window.
     # All 50 slots are oracle-backed. The staleness gate (STALENESS.json)
     # must report every stale entry inside this window head.
     #
@@ -17585,6 +17592,23 @@ _WINDOW_PRIORITY: tuple[str, ...] = (
     "mm_container_headers",
     "mm_gif_jpeg_headers",
     "s_binaryfile_scan",
+    # -- staleness-forced: their call closures changed after their last
+    # verdicts (r06-r09) and they were never re-queued --
+    "mm_wav_native_decode",
+    "mm_gif_native_decode",
+    "mm_jpeg_native_decode",
+    "mm_resize_nearest_native",
+    "mm_jpeg_color_decode",
+    "mm_jpeg_progressive_decode",
+    "mm_avi_frame_sample",
+    "mm_png_native_decode",
+    # -- staleness-forced: the one-Python-pass stock features rewrote
+    # indicators.recursive_enrich / _recursive_apply (also re-queues
+    # ind_recursive_family and stock_feature_frame above) --
+    "ind_parabolic_sar",
+    "ts_holt_linear",
+    # -- staleness-forced: the r12 text.unigram_logprob rewrite --
+    "text_unigram_logprob",
     # -- rolling refresh: the last 6 r03-latest oracle-backed --
     "q2_min_balance_supplier",
     "q11_important_parts",
@@ -17607,18 +17631,7 @@ _WINDOW_PRIORITY: tuple[str, ...] = (
     "s_orc_roundtrip",
     "samp_stratified_docs",
     "scd2_snapshot_asof",
-    "simsearch_pq_topk",
     "stock_closed_form_indicators",
-    "stock_fixture_daily_label",
-    "stream_ema_user",
-    "stream_interval_join",
-    "stream_session_30m",
-    "stream_sliding_2d",
-    "stream_static_enrich",
-    "stream_topk_users_daily",
-    "stream_tumbling_daily",
-    "stream_upsert_latest",
-    "w1_lag_label_parity",
 )
 
 

@@ -14,6 +14,13 @@ daily averages via SQL-or-RDD aggregation joined back on ``date_only``
 
 Tests assert both forms are value-identical; bench compares their cost.
 
+``feature_frame`` is the whole pipeline behind ONE exchange and ONE Python
+pass at the sequential-engine shape (the reference's): the raw bars are
+repartitioned on ``symbol`` once, the day windows and the label reuse that
+partitioning, and every indicator (closed-form block, CCI, recursive family)
+comes out of the same per-symbol pandas pass. The few-deep-symbols 'scan'
+shape adds the block-parallel passes' own exchanges.
+
 Fixture generation is fully distributed (``spark.range`` + hash-derived
 uniforms + one cumulative-sum window per symbol) — no driver-side pandas, so
 the same code generates 1 K rows for a unit test or 10 B rows on a cluster.
@@ -230,27 +237,38 @@ def daily_features(df: DataFrame, fused: bool = True) -> DataFrame:
     )
 
 
+def _recursive_engine(df: DataFrame, partition_by: str = "symbol") -> str:
+    """The indicator engine for these bars: 'scan' iff few symbols AND
+    deep series (indicators.SCAN_MIN_ROWS_PER_KEY crossover) — one
+    keys-only aggregate job on the raw bars; the 4x168k reference shape
+    stays on the bit-exact sequential fold, which measured FASTER."""
+    return (
+        "scan"
+        if ind._keyspace_is_degenerate(df, [partition_by])
+        else "sequential"
+    )
+
+
 def feature_hints(
     df: DataFrame,
     partition_by: str = "symbol",
     order_by: str = "date",
 ) -> dict:
-    """Precompute ``feature_frame``'s control-plane inputs — the quantile
-    cut sketch for the parallel rolling pass and the keyspace probe that
-    picks the recursive-indicator engine — as a reusable hint dict.
-    Both are one small Spark job each; a session that runs the pipeline
+    """Precompute ``feature_frame``'s control-plane inputs — the keyspace
+    probe that picks the recursive-indicator engine and, only when it
+    picks 'scan', the quantile cut sketch for the overlap-bucket passes
+    (the sequential engine needs no cuts) — as a reusable hint dict.
+    Each is one small Spark job; a session that runs the pipeline
     repeatedly over the same bar universe should compute them once and
     pass ``feature_frame(bars, **hints)`` (the r06 bench attribution:
     re-running them per invocation cost ~3 s of a 16 s FE stage)."""
-    n = win_ops.shuffle_partitions(df)
-    return {
-        "cuts": win_ops.compute_order_cuts(df, order_by, n),
-        "recursive_engine": (
-            "scan"
-            if ind._keyspace_is_degenerate(df, [partition_by])
-            else "sequential"
-        ),
-    }
+    engine = _recursive_engine(df, partition_by)
+    cuts = None
+    if engine == "scan":
+        cuts = win_ops.compute_order_cuts(
+            df, order_by, win_ops.shuffle_partitions(df)
+        )
+    return {"cuts": cuts, "recursive_engine": engine}
 
 
 def feature_frame(
@@ -260,40 +278,41 @@ def feature_frame(
     cuts: "list[float] | None" = None,
     recursive_engine: str | None = None,
 ) -> DataFrame:
-    """Full reference feature pipeline, engine-style: native indicators
-    (closed-form window pass + one applyInPandas recursive pass), row-wise
-    derived features, day-grain features, and the buy/sell label — the
-    surface ``G_2_rf_nordd_fe.py`` built in 11 join stages.
+    """Full reference feature pipeline, engine-style: day-grain features,
+    the buy/sell label, the native indicators (closed-form block, CCI and
+    the recursive family in ONE Python pass) and the row-wise derived
+    features — the surface ``G_2_rf_nordd_fe.py`` built in 11 join stages.
+
+    One exchange at the sequential-engine shape (fused day windows): the
+    raw bars are repartitioned on ``symbol`` to
+    ``shuffle_partitions`` (REPARTITION_BY_NUM) before anything else.
+    The day windows (``symbol``, ``symbol``+``date_only``), the label
+    window and the per-symbol Python pass are all clustered by that
+    partitioning, so every later operator reuses it, and AQE cannot
+    merge it into fewer tasks. Without the pin Spark drops the Python
+    pass's own repartition as redundant behind the first window's
+    ENSURE_REQUIREMENTS exchange, which AQE coalesced to ONE task for
+    the whole pipeline on small bars.
 
     Stage order is a measured plan choice: the day-grain windows and the
     label depend only on RAW columns, so they run FIRST, on the narrow
     6-column bars — their sorts move ~7x less data than on the ~45-column
-    enriched frame, and the indicator passes' repartition then reuses the
-    window exchange's clustering instead of re-shuffling the full enriched
-    frame (was: windows after enrichment = +25 s of the 43 s pipeline at
-    the 671k-row reference scale)."""
-    # Bucket cut points for the parallel rolling pass, sketched on the RAW
-    # bars: `date` exists unchanged here, and the pruned raw-scan lineage
-    # is far cheaper than re-executing daily-window + label stages (the
-    # sketch inside rolling_apply_parallel would otherwise re-run them).
-    # Callers that invoke the pipeline repeatedly over the same universe
-    # should precompute both hints once via ``feature_hints`` and pass
-    # them in — each None below costs one control-plane job per call.
-    if cuts is None:
-        n = win_ops.shuffle_partitions(df)
-        cuts = win_ops.compute_order_cuts(df, "date", n)
+    enriched frame (was: windows after enrichment = +25 s of the 43 s
+    pipeline at the 671k-row reference scale).
+
+    ``cuts`` (order cut points) are needed only when the engine resolves
+    to 'scan'; ``feature_hints`` computes both hints once for callers that
+    run the pipeline repeatedly over the same universe — each None below
+    costs one control-plane job per call."""
+    # Both probes run on the RAW bars (pruned scan): `date` exists
+    # unchanged here, and probing the enriched frame would re-execute the
+    # daily-window + label stages once per job.
+    n = win_ops.shuffle_partitions(df)
     if recursive_engine is None:
-        # Engine probe on the RAW bars (pruned scan), not the enriched
-        # frame — probing after daily+label would re-execute those stages
-        # once. Policy: scan iff few symbols AND deep series (indicators.
-        # SCAN_MIN_ROWS_PER_KEY crossover); the 4x168k reference shape
-        # stays on the bit-exact sequential fold, which measured FASTER.
-        recursive_engine = (
-            "scan"
-            if ind._keyspace_is_degenerate(df, ["symbol"])
-            else "sequential"
-        )
-    d = daily_features(df, fused=fused)
+        recursive_engine = _recursive_engine(df)
+    if recursive_engine == "scan" and cuts is None:
+        cuts = win_ops.compute_order_cuts(df, "date", n)
+    d = daily_features(df.repartition(n, "symbol"), fused=fused)
     d = win_ops.label_buy_sell(
         d, value_col="high", order_by="date", partition_by="symbol",
         mode=label_mode,

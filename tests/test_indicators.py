@@ -187,7 +187,7 @@ def test_cci_numpy_matches_expression_form(spark):
             assert abs(ra.cci10 - rb.cci10) < 1e-6 * max(1.0, abs(ra.cci10))
 
 
-def test_enrich_parallel_matches_expr_engine(spark):
+def _assert_closed_form_matches_expr(spark, recursive_engine):
     import math
 
     from big_data_analysis_for_stock_market_data_spark import stock
@@ -198,11 +198,13 @@ def test_enrich_parallel_matches_expr_engine(spark):
     bars = stock.make_stock_fixture(spark, n_rows=3000, n_symbols=2).cache()
     cols = ["symbol", "date"] + ind.CLOSED_FORM_COLS
     a = (
-        ind.enrich_ohlcv(bars, engine="expr")
+        ind.enrich_ohlcv(bars, engine="expr", recursive_engine="sequential")
         .select(cols).orderBy("symbol", "date").collect()
     )
     b = (
-        ind.enrich_ohlcv(bars, engine="parallel")
+        ind.enrich_ohlcv(
+            bars, engine="parallel", recursive_engine=recursive_engine
+        )
         .select(cols).orderBy("symbol", "date").collect()
     )
     assert len(a) == len(b)
@@ -221,6 +223,25 @@ def test_enrich_parallel_matches_expr_engine(spark):
                 assert math.isclose(va, vb, rel_tol=tol, abs_tol=tol), (
                     c, ra.date, va, vb,
                 )
+
+
+def test_enrich_parallel_matches_expr_engine(spark):
+    # closed-form block inside the sequential per-key Python pass
+    _assert_closed_form_matches_expr(spark, "auto")
+
+
+def test_enrich_parallel_scan_matches_expr_engine(spark):
+    # closed-form block inside the scan engine's overlap-bucket pass
+    # (shared with CCI): exact at bucket boundaries
+    _assert_closed_form_matches_expr(spark, "scan")
+
+
+def test_recursive_enrich_closed_form_needs_ohlcv(spark):
+    close_only = spark.range(3).selectExpr(
+        "'A' AS symbol", "id AS date", "CAST(id AS DOUBLE) AS close"
+    )
+    with pytest.raises(ValueError, match="high, low and volume"):
+        I.recursive_enrich(close_only, closed_form=True)
 
 
 def test_rolling_beta_matches_numpy_cov_var(spark):

@@ -181,15 +181,43 @@ def test_simhash_banded_join_not_cartesian(spark):
 
 
 def test_stock_feature_frame_shuffle_budget(spark):
-    # The full FE pipeline earns exactly 4 exchanges (fixture prefix sum,
-    # daily/label windows, bucketed closed-form pass, recursive per-key
-    # pass); a regression that re-shuffles the wide enriched frame shows
-    # up here before it shows up in BENCH
+    # The full FE pipeline earns exactly 2 exchanges on the fixture: the
+    # fixture's own prefix sum and the one symbol repartition that the
+    # day/label windows and the single Python pass all reuse; a
+    # regression that re-shuffles the wide enriched frame shows up here
+    # before it shows up in BENCH
     from big_data_analysis_for_stock_market_data_spark import stock
 
     bars = stock.make_stock_fixture(spark, n_rows=4_000, n_symbols=2)
     full = stock.feature_frame(bars)
-    assert P.count_shuffles(full) <= 4
+    assert P.count_shuffles(full) == 2
+
+
+def test_stock_feature_frame_one_exchange_one_python_pass(spark, tmp_path):
+    # Over scanned bars (no fixture lineage), the sequential-engine
+    # pipeline is one REPARTITION_BY_NUM exchange — which AQE cannot
+    # coalesce into fewer tasks — and one Python node carrying every
+    # indicator
+    import re
+
+    from big_data_analysis_for_stock_market_data_spark import stock
+    from big_data_analysis_for_stock_market_data_spark.sources.io import (
+        read_parquet, write_parquet,
+    )
+
+    path = str(tmp_path / "bars.parquet")
+    write_parquet(stock.make_stock_fixture(spark, n_rows=2_000, n_symbols=2), path)
+    full = stock.feature_frame(
+        read_parquet(spark, path), recursive_engine="sequential"
+    )
+    plan = P.explain_str(full, "simple")
+    exchanges = re.findall(r"\bExchange [^\n]*", plan)
+    assert len(exchanges) == 1, exchanges
+    assert "REPARTITION_BY_NUM" in exchanges[0]
+    python_nodes = [
+        m for n in P.PYTHON_NODES for m in re.findall(rf"\b{n}\b", plan)
+    ]
+    assert python_nodes == ["FlatMapGroupsInPandas"]
 
 
 def test_chunking_is_shuffle_free_flatmap(spark):

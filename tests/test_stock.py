@@ -89,3 +89,36 @@ def test_stock_pipeline_end_to_end(bars):
         bars, model="svc", transform="pca", pca_k=4, max_iter=5
     )
     assert 0.0 <= fit_pca.metrics["areaUnderROC"] <= 1.0
+
+
+def test_feature_frame_sequential_runs_no_cut_sketch(spark, bars):
+    # The order-cut sketch (an approxQuantile job) feeds only the scan
+    # engine's bucketed passes. At the sequential shape, building the
+    # frame runs the engine probe's jobs and nothing else; with the
+    # engine given, it runs none.
+    from big_data_analysis_for_stock_market_data_spark.operators import (
+        indicators as ind,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bars.count()  # cache filled outside the counted groups
+
+    def jobs(group, build) -> int:
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    pinned = jobs(
+        "fe_pinned",
+        lambda: stock.feature_frame(bars, recursive_engine="sequential"),
+    )
+    assert pinned == 0
+    probe = jobs(
+        "fe_probe", lambda: ind._keyspace_is_degenerate(bars, ["symbol"])
+    )
+    assert probe >= 1
+    assert jobs("fe_auto", lambda: stock.feature_frame(bars)) == probe
