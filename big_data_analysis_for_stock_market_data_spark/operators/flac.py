@@ -31,13 +31,14 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
+
+from big_data_analysis_for_stock_market_data_spark.operators.multimodal import (
+    _per_id_rows,
+)
 
 
 class _MsbWriter:
@@ -580,6 +581,13 @@ def decode_flac(payload: bytes) -> "dict | None":
         return None
 
 
+def _flac_fixture_wave(uid: int) -> "np.ndarray":
+    """The planted 16-bit sawtooth of the FLAC stages: x(t) =
+    ((id*13 + t*7) % 2001) - 1000 over n = 600 + 97*(id%5) samples."""
+    t = np.arange(600 + 97 * (uid % 5), dtype=np.int64)
+    return ((uid * 13 + t * 7) % 2001) - 1000
+
+
 def flac_roundtrip_stats(
     users: DataFrame, id_col: str = "user_id"
 ) -> DataFrame:
@@ -591,48 +599,28 @@ def flac_roundtrip_stats(
     encoded and decoded back. The STREAMINFO MD5 over reconstructed
     PCM must verify, and exact integer sums must equal the closed-form
     replay."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("n_frames", T.LongType(), True),
-        T.StructField("sample_rate", T.LongType(), True),
-        T.StructField("md5_ok", T.LongType(), True),
-        T.StructField("sum_samples", T.LongType(), True),
-        T.StructField("sum_abs", T.LongType(), True),
-        T.StructField("first_sample", T.LongType(), True),
-        T.StructField("last_sample", T.LongType(), True),
-    ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                n = 600 + 97 * (uid % 5)
-                t = np.arange(n, dtype=np.int64)
-                x = ((uid * 13 + t * 7) % 2001) - 1000
-                payload = build_flac(x, sample_rate=8000, block_size=512)
-                dec = decode_flac(payload)
-                got = dec["samples"]
-                rows.append({
-                    id_col: uid,
-                    "n_samples": dec["n_samples"],
-                    "n_frames": dec["n_frames"],
-                    "sample_rate": dec["sample_rate"],
-                    "md5_ok": int(dec["md5_ok"]),
-                    "sum_samples": int(got.sum()),
-                    "sum_abs": int(np.abs(got).sum()),
-                    "first_sample": int(got[0]),
-                    "last_sample": int(got[-1]),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows_for(uid: int) -> "list[dict]":
+        dec = decode_flac(build_flac(
+            _flac_fixture_wave(uid), sample_rate=8000, block_size=512
+        ))
+        got = dec["samples"]
+        return [{
+            "n_samples": dec["n_samples"],
+            "n_frames": dec["n_frames"],
+            "sample_rate": dec["sample_rate"],
+            "md5_ok": int(dec["md5_ok"]),
+            "sum_samples": int(got.sum()),
+            "sum_abs": int(np.abs(got).sum()),
+            "first_sample": int(got[0]),
+            "last_sample": int(got[-1]),
+        }]
 
-    from big_data_analysis_for_stock_market_data_spark.operators import (
-        ensure_parallelism,
-    )
-
-    return ensure_parallelism(users.select(id_col)).mapInPandas(
-        run, schema=schema
+    return _per_id_rows(
+        users, id_col,
+        ["n_samples", "n_frames", "sample_rate", "md5_ok", "sum_samples",
+         "sum_abs", "first_sample", "last_sample"],
+        rows_for, "heavy",
     )
 
 
@@ -645,47 +633,31 @@ def audio_feature_stats(
     (sign products < 0 at in-frame boundaries t % window != 0) are
     emitted — the audio analogue of the image feature extractors, with
     the decode path on the verified surface. One row per (id, frame)."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("win_idx", T.LongType(), False),
-        T.StructField("n_in_window", T.LongType(), True),
-        T.StructField("energy", T.LongType(), True),
-        T.StructField("zero_crossings", T.LongType(), True),
-    ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                n = 600 + 97 * (uid % 5)
-                t = np.arange(n, dtype=np.int64)
-                x = ((uid * 13 + t * 7) % 2001) - 1000
-                dec = decode_flac(
-                    build_flac(x, sample_rate=8000, block_size=512)
-                )
-                s = dec["samples"]
-                widx = t // window
-                cross = np.zeros(n, dtype=np.int64)
-                cross[1:] = (s[:-1] * s[1:] < 0).astype(np.int64)
-                cross[t % window == 0] = 0
-                for w in range(int(widx.max()) + 1):
-                    m = widx == w
-                    rows.append({
-                        id_col: uid,
-                        "win_idx": w,
-                        "n_in_window": int(m.sum()),
-                        "energy": int((s[m] * s[m]).sum()),
-                        "zero_crossings": int(cross[m].sum()),
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows_for(uid: int) -> "list[dict]":
+        x = _flac_fixture_wave(uid)
+        s = decode_flac(build_flac(x, sample_rate=8000, block_size=512))[
+            "samples"
+        ]
+        t = np.arange(len(x))
+        widx = t // window
+        cross = np.zeros(len(x), dtype=np.int64)
+        cross[1:] = (s[:-1] * s[1:] < 0).astype(np.int64)
+        cross[t % window == 0] = 0
+        rows = []
+        for w in range(int(widx.max()) + 1):
+            m = widx == w
+            rows.append({
+                "win_idx": w,
+                "n_in_window": int(m.sum()),
+                "energy": int((s[m] * s[m]).sum()),
+                "zero_crossings": int(cross[m].sum()),
+            })
+        return rows
 
-    from big_data_analysis_for_stock_market_data_spark.operators import (
-        ensure_parallelism,
-    )
-
-    return ensure_parallelism(users.select(id_col)).mapInPandas(
-        run, schema=schema
+    return _per_id_rows(
+        users, id_col, ["n_in_window", "energy", "zero_crossings"],
+        rows_for, "heavy", keys=("win_idx",),
     )
 
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -340,82 +340,54 @@ def _parse_one_container(payload: bytes) -> dict:
     return out
 
 
-#: Size-aware Python fan-out floors (r12, guide §2.5-§2.6 / VERDICT r11
-#: items 2/4): unconditionally widening to the session target spins a
-#: full complement of Python workers for corpora whose TOTAL decode work
-#: is a fraction of a second — measured on the 1500-id sf0.1 corpus, the
-#: light parsers (WAV/PNG/GIF/BMP/container headers, ~0.1-1 ms/row) run
-#: 2-7x FASTER at width 1 than at width 32 (wav 0.39 s vs 1.56, container
-#: chain 0.42 vs 2.83), while the mid-weight decoders (JPEG Huffman
-#: paths, AVI, ~2-5 ms/row) bottom out at width 8-16 (jpeg_color 1.48 at
-#: 8 vs 2.39 at 1 / 1.25 at 32) and the heavy ones (FLAC ~50 ms/row,
-#: WebP ~20 ms/row) want every core (flac 2.25 at 32 vs 10.1 at 1 —
-#: those call sites keep the plain session-width ``ensure_parallelism``).
-#: The floors translate that sweep into scan bytes per Python task: the
-#: widening target is ceil(input scan bytes / floor), capped at the
-#: session target, so tiny corpora stay narrow, and a 100 TB corpus still
-#: fans out to full width. Overridable per session for different
-#: hardware (spark.graft.pythonFanout.lightBytesPerTask / .midBytesPerTask).
-_LIGHT_BYTES_PER_TASK = 4 << 20
-_MID_BYTES_PER_TASK = 256 << 10
-
-_LIGHT_BYTES_CONF = "spark.graft.pythonFanout.lightBytesPerTask"
-_MID_BYTES_CONF = "spark.graft.pythonFanout.midBytesPerTask"
+#: Python fan-out floors, in input scan bytes per Python task, by the
+#: per-row cost of the pass (r12, guide §2.5-§2.6 / VERDICT r11 items
+#: 2/4). Unconditionally widening to the session target spins a full
+#: complement of Python workers for corpora whose TOTAL decode work is a
+#: fraction of a second. The sweep behind the floors, on the 1500-id
+#: sf0.1 corpus:
+#:   - light parsers (WAV/PNG/GIF/BMP/container headers, ~0.1-1 ms/row)
+#:     run 2-7x FASTER at width 1 than at width 32 (wav 0.39 s vs 1.56,
+#:     container chain 0.42 vs 2.83): floor 4 MiB per task;
+#:   - mid-weight decoders (JPEG Huffman paths, AVI, ~2-5 ms/row) bottom
+#:     out at width 8-16 (jpeg_color 1.48 at 8 vs 2.39 at 1 / 1.25 at
+#:     32): floor 256 KiB per task;
+#:   - heavy decoders (FLAC ~50 ms/row, WebP ~20 ms/row) want every core
+#:     (flac 2.25 at 32 vs 10.1 at 1): no floor, the session target.
+#: A floored width is ceil(input scan bytes / floor), capped at the
+#: session target, so tiny corpora stay narrow and a 100 TB corpus still
+#: fans out to full width.
+_BYTES_PER_TASK = {"light": 4 << 20, "mid": 256 << 10}
 
 
-def _sized_width(df: DataFrame, bytes_per_task: int, conf_key: str) -> int:
-    """Python-fan-out width for ``df``: the session's shuffle-partition
-    target, capped by the input's driver-side scan-byte estimate divided
-    by ``bytes_per_task`` (overridable via ``conf_key``). Pure metadata —
-    ``inputFiles()`` + filesystem stats, no job. Derived frames report
-    their underlying scan's files, which is exactly the right size proxy
-    here (the id universe a synthesis pass fans out over is a projection
-    of that scan). Falls back to the plain session target when the
-    estimate is unavailable (in-memory frames, exotic FS)."""
+def _widen(df: DataFrame, cost: str) -> DataFrame:
+    """``ensure_parallelism`` at the Python fan-out width of the ``cost``
+    class ("light", "mid" or "heavy", see ``_BYTES_PER_TASK``). The scan
+    bytes come from ``inputFiles()`` plus filesystem stats — metadata, no
+    job. Derived frames report their underlying scan's files, which is
+    the right size proxy here (the id universe a synthesis pass fans out
+    over is a projection of that scan). Falls back to the session target
+    when the estimate is unavailable (exotic FS)."""
     from big_data_analysis_for_stock_market_data_spark.operators import (
         _file_length,
-        _parse_bytes,
+        ensure_parallelism,
     )
 
+    if cost == "heavy":
+        return ensure_parallelism(df)
+    floor = _BYTES_PER_TASK[cost]
     sess = df.sparkSession
     target = int(sess.conf.get("spark.sql.shuffle.partitions"))
     try:
-        floor = _parse_bytes(sess.conf.get(conf_key, str(bytes_per_task)))
-        files = df.inputFiles()
-        if not files:
-            return target
-        total = sum(_file_length(sess, f) for f in files)
+        total = sum(_file_length(sess, f) for f in df.inputFiles())
+        width = max(1, min(target, math.ceil(total / floor)))
     except Exception:
-        return target
-    return max(1, min(target, math.ceil(total / max(1, floor))))
-
-
-def _widen_light(df: DataFrame) -> DataFrame:
-    """``ensure_parallelism`` with the light-parser width floor."""
-    from big_data_analysis_for_stock_market_data_spark.operators import (
-        ensure_parallelism,
-    )
-
-    return ensure_parallelism(
-        df, min_partitions=_sized_width(
-            df, _LIGHT_BYTES_PER_TASK, _LIGHT_BYTES_CONF)
-    )
-
-
-def _widen_mid(df: DataFrame) -> DataFrame:
-    """``ensure_parallelism`` with the mid-weight-decoder width floor."""
-    from big_data_analysis_for_stock_market_data_spark.operators import (
-        ensure_parallelism,
-    )
-
-    return ensure_parallelism(
-        df, min_partitions=_sized_width(
-            df, _MID_BYTES_PER_TASK, _MID_BYTES_CONF)
-    )
+        width = target
+    return ensure_parallelism(df, min_partitions=width)
 
 
 def _widen_unless_repartitioned(df: DataFrame) -> DataFrame:
-    """``_widen_light`` unless the lineage already holds an EXPLICIT
+    """``_widen(df, "light")`` unless the lineage already holds an EXPLICIT
     repartition (r11, guide §2.3/§2.4): ``inputFiles()`` reports the
     underlying scan's files even for derived frames, so the plain widening
     after ``synthesize_containers`` re-shuffled the synthesized binary
@@ -426,12 +398,12 @@ def _widen_unless_repartitioned(df: DataFrame) -> DataFrame:
     single tiny partition and a compute-dense Python pass downstream still
     needs the width. Driver-side plan-string inspection only — no job.
     Kept module-private so the shared ``ensure_parallelism`` (in dozens of
-    verdicted entries' closures) is untouched. Since r12 the fallback
-    widening is size-aware (``_widen_light``), so when the synthesis
-    stage legitimately stayed narrow (tiny corpus, no repartition in the
-    lineage) this no longer fans the payload out either — the two
-    policies agree by construction because they derive the same width
-    from the same underlying scan bytes."""
+    verdicted entries' closures) is untouched. The fallback widening is
+    the light class, so when the synthesis stage legitimately stayed
+    narrow (tiny corpus, no repartition in the lineage) this does not fan
+    the payload out either — the two policies agree by construction
+    because they derive the same width from the same underlying scan
+    bytes."""
     import re
 
     analyzed = df._jdf.queryExecution().analyzed().toString()
@@ -442,7 +414,60 @@ def _widen_unless_repartitioned(df: DataFrame) -> DataFrame:
     if re.search(r"Repartition \d+, true|\bRepartitionByExpression\b",
                  analyzed):
         return df
-    return _widen_light(df)
+    return _widen(df, "light")
+
+
+def _per_id_rows(
+    users: DataFrame,
+    id_col: str,
+    columns: "Sequence[str]",
+    rows_for: "Callable[[int], list[dict]]",
+    cost: str,
+    keys: "tuple[str, ...]" = (),
+) -> DataFrame:
+    """The shared shape of the planted-fixture codec stages: widen
+    ``users.select(id_col)`` by the ``cost`` class (``_widen``), then one
+    ``mapInPandas`` pass emits ``rows_for(uid)`` per id, each row tagged
+    with the id. The output is all ``LongType``, in the order ``id_col``,
+    ``keys``, ``columns``; the id and key columns are non-null."""
+    names = [id_col, *keys, *columns]
+    schema = T.StructType([
+        T.StructField(c, T.LongType(), i > len(keys))
+        for i, c in enumerate(names)
+    ])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for uid in pdf[id_col]:
+                uid = int(uid)
+                rows.extend({id_col: uid, **r} for r in rows_for(uid))
+            yield pd.DataFrame(rows, columns=names)
+
+    return _widen(users.select(id_col), cost).mapInPandas(run, schema=schema)
+
+
+#: Output columns of ``_rgb_sums`` (the PNG, GIF and WebP stages).
+_RGB_SUM_COLUMNS = (
+    "width", "height", "sum_r", "sum_g", "sum_b", "rowweighted_r",
+)
+
+
+def _rgb_sums(pixels: "np.ndarray") -> dict:
+    """Integer stats of a decoded (h, w, >=3) image: its size, the
+    R/G/B channel sums, and a ROW-WEIGHTED red sum (flip- and
+    offset-sensitive: a decoder that returns rows bottom-up or shifts a
+    scanline changes it even though plain sums would not)."""
+    px = pixels.astype(np.int64)
+    h, w = px.shape[:2]
+    return {
+        "width": w,
+        "height": h,
+        "sum_r": int(px[:, :, 0].sum()),
+        "sum_g": int(px[:, :, 1].sum()),
+        "sum_b": int(px[:, :, 2].sum()),
+        "rowweighted_r": int(((np.arange(h)[:, None] + 1) * px[:, :, 0]).sum()),
+    }
 
 
 def synthesize_containers(
@@ -512,10 +537,10 @@ def synthesize_containers(
     # synthesized payload bytes. With the width established here, the
     # parse-side widening sees the explicit repartition and no
     # payload-carrying exchange exists anywhere in the plan. The width
-    # itself is size-aware since r12 (``_widen_light``): a corpus whose
-    # total synthesis+parse work is sub-second stays at scan width
-    # instead of spinning a full complement of Python workers.
-    return _widen_light(df.select(id_col, text_col)).mapInPandas(
+    # itself is size-aware since r12 (the light class of ``_widen``): a
+    # corpus whose total synthesis+parse work is sub-second stays at scan
+    # width instead of spinning a full complement of Python workers.
+    return _widen(df.select(id_col, text_col), "light").mapInPandas(
         run, out_schema
     )
 
@@ -554,7 +579,7 @@ def synthesize_gif_jpeg(
 
     # Same widen-the-narrow-input rule as synthesize_containers (r11),
     # size-aware since r12.
-    return _widen_light(df.select(id_col)).mapInPandas(run, out_schema)
+    return _widen(df.select(id_col), "light").mapInPandas(run, out_schema)
 
 
 def parse_container_headers(
@@ -1144,48 +1169,31 @@ def wav_roundtrip_stats(
     decode for real (no media library anywhere)."""
     import struct
 
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("sum_samples", T.LongType(), True),
-        T.StructField("sum_abs", T.LongType(), True),
-        T.StructField("min_sample", T.LongType(), True),
-        T.StructField("max_sample", T.LongType(), True),
-        T.StructField("first_sample", T.LongType(), True),
-        T.StructField("last_sample", T.LongType(), True),
-    ])
+    def rows_for(uid: int) -> "list[dict]":
+        n = 200 + uid % 57
+        s = ((uid * 31 + np.arange(n) * 7) % 65536 - 32768).astype("<i2")
+        junk = (
+            b"JUNK" + struct.pack("<I", 3) + b"xyz" + b"\x00"
+            if uid % 2
+            else None
+        )
+        dec = decode_wav_samples(build_wav(s.tobytes(), 8000, extra_chunk=junk))
+        d64 = dec.astype(np.int64)
+        return [{
+            "n_samples": len(dec),
+            "sum_samples": int(d64.sum()),
+            "sum_abs": int(np.abs(d64).sum()),
+            "min_sample": int(d64.min()),
+            "max_sample": int(d64.max()),
+            "first_sample": int(d64[0]),
+            "last_sample": int(d64[-1]),
+        }]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                n = 200 + uid % 57
-                s = ((uid * 31 + np.arange(n) * 7) % 65536 - 32768).astype(
-                    "<i2"
-                )
-                junk = (
-                    b"JUNK" + struct.pack("<I", 3) + b"xyz" + b"\x00"
-                    if uid % 2
-                    else None
-                )
-                wav = build_wav(s.tobytes(), 8000, extra_chunk=junk)
-                dec = decode_wav_samples(wav)
-                d64 = dec.astype(np.int64)
-                rows.append({
-                    id_col: uid,
-                    "n_samples": len(dec),
-                    "sum_samples": int(d64.sum()),
-                    "sum_abs": int(np.abs(d64).sum()),
-                    "min_sample": int(d64.min()),
-                    "max_sample": int(d64.max()),
-                    "first_sample": int(d64[0]),
-                    "last_sample": int(d64[-1]),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return _widen_light(users.select(id_col)).mapInPandas(
-        run, schema=schema
+    return _per_id_rows(
+        users, id_col,
+        ["n_samples", "sum_samples", "sum_abs", "min_sample", "max_sample",
+         "first_sample", "last_sample"],
+        rows_for, "light",
     )
 
 
@@ -1199,46 +1207,19 @@ def png_roundtrip_stats(
     emit integer channel sums plus a ROW-WEIGHTED red sum (flip- and
     offset-sensitive: a decoder that returns rows bottom-up or shifts a
     scanline changes it even though plain sums would not)."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("width", T.LongType(), True),
-        T.StructField("height", T.LongType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("rowweighted_r", T.LongType(), True),
-    ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                w, h = 8 + uid % 9, 5 + uid % 7
-                r_ix = np.arange(h)[:, None, None]
-                c_ix = np.arange(w)[None, :, None]
-                ch_ix = np.arange(3)[None, None, :]
-                px = (
-                    (uid * 7 + r_ix * 31 + c_ix * 13 + ch_ix * 71) % 256
-                ).astype(np.uint8)
-                png = encode_png_pixels(px, filter_mode="row_cycle")
-                dec = decode_png_pixels(png).astype(np.int64)
-                rows.append({
-                    id_col: uid,
-                    "width": dec.shape[1],
-                    "height": dec.shape[0],
-                    "sum_r": int(dec[:, :, 0].sum()),
-                    "sum_g": int(dec[:, :, 1].sum()),
-                    "sum_b": int(dec[:, :, 2].sum()),
-                    "rowweighted_r": int(
-                        ((np.arange(h)[:, None] + 1) * dec[:, :, 0]).sum()
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows_for(uid: int) -> "list[dict]":
+        w, h = 8 + uid % 9, 5 + uid % 7
+        r_ix = np.arange(h)[:, None, None]
+        c_ix = np.arange(w)[None, :, None]
+        ch_ix = np.arange(3)[None, None, :]
+        px = (
+            (uid * 7 + r_ix * 31 + c_ix * 13 + ch_ix * 71) % 256
+        ).astype(np.uint8)
+        png = encode_png_pixels(px, filter_mode="row_cycle")
+        return [_rgb_sums(decode_png_pixels(png))]
 
-    return _widen_light(users.select(id_col)).mapInPandas(
-        run, schema=schema
-    )
+    return _per_id_rows(users, id_col, _RGB_SUM_COLUMNS, rows_for, "light")
 
 
 def _lzw_encode_gif(indices, min_code_size: int) -> bytes:
@@ -1443,15 +1424,6 @@ def gif_roundtrip_stats(
     code-width growth timing, dictionary reset, sub-block reassembly,
     palette application — shifts the stats against the closed-form
     replay."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("width", T.LongType(), True),
-        T.StructField("height", T.LongType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("rowweighted_r", T.LongType(), True),
-    ])
     pal = np.stack(
         [
             np.arange(256),
@@ -1461,35 +1433,14 @@ def gif_roundtrip_stats(
         axis=1,
     ).astype(np.uint8)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                w, h = 6 + uid % 8, 4 + uid % 6
-                r_ix = np.arange(h)[:, None]
-                c_ix = np.arange(w)[None, :]
-                idx = ((uid * 11 + r_ix * 29 + c_ix * 17) % 256).astype(
-                    np.uint8
-                )
-                gif = build_gif_pixels(idx, pal)
-                dec = decode_gif_pixels(gif).astype(np.int64)
-                rows.append({
-                    id_col: uid,
-                    "width": dec.shape[1],
-                    "height": dec.shape[0],
-                    "sum_r": int(dec[:, :, 0].sum()),
-                    "sum_g": int(dec[:, :, 1].sum()),
-                    "sum_b": int(dec[:, :, 2].sum()),
-                    "rowweighted_r": int(
-                        ((np.arange(h)[:, None] + 1) * dec[:, :, 0]).sum()
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows_for(uid: int) -> "list[dict]":
+        w, h = 6 + uid % 8, 4 + uid % 6
+        r_ix = np.arange(h)[:, None]
+        c_ix = np.arange(w)[None, :]
+        idx = ((uid * 11 + r_ix * 29 + c_ix * 17) % 256).astype(np.uint8)
+        return [_rgb_sums(decode_gif_pixels(build_gif_pixels(idx, pal)))]
 
-    return _widen_light(users.select(id_col)).mapInPandas(
-        run, schema=schema
-    )
+    return _per_id_rows(users, id_col, _RGB_SUM_COLUMNS, rows_for, "light")
 
 
 # ---------------------------------------------------------------------------
@@ -1903,6 +1854,32 @@ def decode_jpeg_baseline(payload: bytes) -> "dict | None":
 _JPEG_FIXTURE_AC_POS = (1, 5, 17, 33, 62)
 
 
+def _jpeg_fixture_coeffs(uid: int) -> "tuple[int, int, np.ndarray]":
+    """The planted grayscale coefficient surface of the baseline and
+    progressive JPEG stages: a (2 + id%3) x (1 + id%2) block grid (width,
+    height in blocks) and its zig-zag coefficients."""
+    bw_, bh_ = 2 + uid % 3, 1 + uid % 2
+    n = bw_ * bh_
+    zz = np.zeros((n, 64), dtype=np.int64)
+    for b in range(n):
+        zz[b, 0] = ((uid * 7 + b * 13) % 401) - 200
+        for k in _JPEG_FIXTURE_AC_POS:
+            zz[b, k] = ((uid * 3 + b * 5 + k * 11) % 31) - 15
+    return bw_, bh_, zz
+
+
+def _zigzag_stats(got: "np.ndarray") -> dict:
+    """Exact integer stats of decoded (blocks, 64) zig-zag coefficients."""
+    return {
+        "sum_dc": int(got[:, 0].sum()),
+        "blockweighted_dc": int(
+            ((np.arange(len(got)) + 1) * got[:, 0]).sum()
+        ),
+        "sum_abs_ac": int(np.abs(got[:, 1:]).sum()),
+        "n_nonzero_ac": int((got[:, 1:] != 0).sum()),
+    }
+
+
 def jpeg_roundtrip_stats(
     users: DataFrame, id_col: str = "user_id"
 ) -> DataFrame:
@@ -1917,58 +1894,27 @@ def jpeg_roundtrip_stats(
     Any defect in Huffman coding, zig-zag, DC prediction, restart
     handling, bit (de)stuffing, or the IDCT shifts the stats against
     the closed-form replay."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("width", T.LongType(), True),
-        T.StructField("height", T.LongType(), True),
-        T.StructField("sum_dc", T.LongType(), True),
-        T.StructField("blockweighted_dc", T.LongType(), True),
-        T.StructField("sum_abs_ac", T.LongType(), True),
-        T.StructField("n_nonzero_ac", T.LongType(), True),
-        T.StructField("flat_pixel_sum", T.LongType(), True),
-    ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                bw_, bh_ = 2 + uid % 3, 1 + uid % 2
-                n = bw_ * bh_
-                zz = np.zeros((n, 64), dtype=np.int64)
-                for b in range(n):
-                    zz[b, 0] = ((uid * 7 + b * 13) % 401) - 200
-                    for k in _JPEG_FIXTURE_AC_POS:
-                        zz[b, k] = ((uid * 3 + b * 5 + k * 11) % 31) - 15
-                payload = build_jpeg_from_coeffs(
-                    zz, bw_, bh_, restart_interval=2 if uid % 2 else 0
-                )
-                dec = decode_jpeg_baseline(payload)
-                g = uid % 256
-                flat = np.zeros((2, 64), dtype=np.int64)
-                flat[:, 0] = 8 * (g - 128)
-                fdec = decode_jpeg_baseline(
-                    build_jpeg_from_coeffs(flat, 2, 1)
-                )
-                got = dec["zigzag"]
-                rows.append({
-                    id_col: uid,
-                    "width": dec["width"],
-                    "height": dec["height"],
-                    "sum_dc": int(got[:, 0].sum()),
-                    "blockweighted_dc": int(
-                        ((np.arange(n) + 1) * got[:, 0]).sum()
-                    ),
-                    "sum_abs_ac": int(np.abs(got[:, 1:]).sum()),
-                    "n_nonzero_ac": int((got[:, 1:] != 0).sum()),
-                    "flat_pixel_sum": int(
-                        fdec["pixels"].astype(np.int64).sum()
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows_for(uid: int) -> "list[dict]":
+        bw_, bh_, zz = _jpeg_fixture_coeffs(uid)
+        dec = decode_jpeg_baseline(build_jpeg_from_coeffs(
+            zz, bw_, bh_, restart_interval=2 if uid % 2 else 0
+        ))
+        flat = np.zeros((2, 64), dtype=np.int64)
+        flat[:, 0] = 8 * (uid % 256 - 128)
+        fdec = decode_jpeg_baseline(build_jpeg_from_coeffs(flat, 2, 1))
+        return [{
+            "width": dec["width"],
+            "height": dec["height"],
+            **_zigzag_stats(dec["zigzag"]),
+            "flat_pixel_sum": int(fdec["pixels"].astype(np.int64).sum()),
+        }]
 
-    return _widen_mid(users.select(id_col)).mapInPandas(
-        run, schema=schema
+    return _per_id_rows(
+        users, id_col,
+        ["width", "height", "sum_dc", "blockweighted_dc", "sum_abs_ac",
+         "n_nonzero_ac", "flat_pixel_sum"],
+        rows_for, "mid",
     )
 
 
@@ -1982,49 +1928,31 @@ def resize_roundtrip_stats(
     the emitted channel sums are closed-form replayable because the
     source index of output (i, j) is exactly ((i*h)//out_h,
     (j*w)//out_w) — integer arithmetic, no float grid."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("src_w", T.LongType(), True),
-        T.StructField("src_h", T.LongType(), True),
-        T.StructField("rs_sum_r", T.LongType(), True),
-        T.StructField("rs_sum_g", T.LongType(), True),
-        T.StructField("rs_sum_b", T.LongType(), True),
-        T.StructField("rs_corner_sum", T.LongType(), True),
-    ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                w, h = 8 + uid % 9, 5 + uid % 7
-                r_ix = np.arange(h)[:, None]
-                c_ix = np.arange(w)[None, :]
-                base = (uid * 7 + r_ix * 31 + c_ix * 13) % 256
-                px = np.stack(
-                    [base, (base + 71) % 256, (base + 142) % 256], axis=2
-                ).astype(np.uint8)
-                dec = decode_png_pixels(
-                    encode_png_pixels(px, filter_mode="row_cycle")
-                )
-                rs = resize_pixels_nearest(dec, out_w, out_h).astype(
-                    np.int64
-                )
-                rows.append({
-                    id_col: uid,
-                    "src_w": w,
-                    "src_h": h,
-                    "rs_sum_r": int(rs[:, :, 0].sum()),
-                    "rs_sum_g": int(rs[:, :, 1].sum()),
-                    "rs_sum_b": int(rs[:, :, 2].sum()),
-                    "rs_corner_sum": int(
-                        rs[0, 0, 0] + rs[out_h - 1, out_w - 1, 0]
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows_for(uid: int) -> "list[dict]":
+        w, h = 8 + uid % 9, 5 + uid % 7
+        r_ix = np.arange(h)[:, None]
+        c_ix = np.arange(w)[None, :]
+        base = (uid * 7 + r_ix * 31 + c_ix * 13) % 256
+        px = np.stack(
+            [base, (base + 71) % 256, (base + 142) % 256], axis=2
+        ).astype(np.uint8)
+        dec = decode_png_pixels(encode_png_pixels(px, filter_mode="row_cycle"))
+        rs = resize_pixels_nearest(dec, out_w, out_h).astype(np.int64)
+        return [{
+            "src_w": w,
+            "src_h": h,
+            "rs_sum_r": int(rs[:, :, 0].sum()),
+            "rs_sum_g": int(rs[:, :, 1].sum()),
+            "rs_sum_b": int(rs[:, :, 2].sum()),
+            "rs_corner_sum": int(rs[0, 0, 0] + rs[out_h - 1, out_w - 1, 0]),
+        }]
 
-    return _widen_light(users.select(id_col)).mapInPandas(
-        run, schema=schema
+    return _per_id_rows(
+        users, id_col,
+        ["src_w", "src_h", "rs_sum_r", "rs_sum_g", "rs_sum_b",
+         "rs_corner_sum"],
+        rows_for, "light",
     )
 
 
@@ -2366,82 +2294,61 @@ def jpeg_color_roundtrip_stats(
     in interleaved MCU ordering, per-component table routing or DC
     prediction, chroma upsampling, or the color conversion shifts the
     stats against the closed-form replay."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("width", T.LongType(), True),
-        T.StructField("height", T.LongType(), True),
-        T.StructField("sum_dc_y", T.LongType(), True),
-        T.StructField("sum_dc_cb", T.LongType(), True),
-        T.StructField("sum_dc_cr", T.LongType(), True),
-        T.StructField("sum_abs_ac_y", T.LongType(), True),
-        T.StructField("sum_abs_ac_chroma", T.LongType(), True),
-        T.StructField("n_nonzero_ac", T.LongType(), True),
-        T.StructField("flat_rgb_sum", T.LongType(), True),
-    ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                mcus_x = 1 + uid % 2
-                n_y = 4 * mcus_x
-                y = np.zeros((n_y, 64), dtype=np.int64)
-                cb = np.zeros((mcus_x, 64), dtype=np.int64)
-                cr = np.zeros((mcus_x, 64), dtype=np.int64)
-                for b in range(n_y):
-                    y[b, 0] = ((uid * 5 + b * 17) % 401) - 200
-                    for k in _JPEG_COLOR_Y_AC_POS:
-                        y[b, k] = ((uid * 3 + b * 5 + k * 11) % 31) - 15
-                for b in range(mcus_x):
-                    cb[b, 0] = ((uid * 3 + b * 7) % 201) - 100
-                    cr[b, 0] = ((uid * 11 + b * 13) % 201) - 100
-                    for k in _JPEG_COLOR_C_AC_POS:
-                        cb[b, k] = ((uid * 7 + b * 3 + k * 5) % 21) - 10
-                        cr[b, k] = ((uid * 13 + b * 3 + k * 5) % 21) - 10
-                payload = build_jpeg_color_from_coeffs(
-                    y, cb, cr, mcus_x, 1, (2, 2),
-                    restart_interval=2 if uid % 2 else 0,
-                    quant_chroma=np.full(64, 2, dtype=np.uint8),
-                )
-                dec = decode_jpeg_color(payload)
-                gy, gcb, gcr = dec["zigzag_comps"]
-                g = uid % 256
-                fy = np.zeros((4, 64), dtype=np.int64)
-                fy[:, 0] = 8 * (g - 128)
-                fdec = decode_jpeg_color(
-                    build_jpeg_color_from_coeffs(
-                        fy,
-                        np.zeros((1, 64), dtype=np.int64),
-                        np.zeros((1, 64), dtype=np.int64),
-                        1, 1, (2, 2),
-                    )
-                )
-                rows.append({
-                    id_col: uid,
-                    "width": dec["width"],
-                    "height": dec["height"],
-                    "sum_dc_y": int(gy[:, 0].sum()),
-                    "sum_dc_cb": int(gcb[:, 0].sum()),
-                    "sum_dc_cr": int(gcr[:, 0].sum()),
-                    "sum_abs_ac_y": int(np.abs(gy[:, 1:]).sum()),
-                    "sum_abs_ac_chroma": int(
-                        np.abs(gcb[:, 1:]).sum()
-                        + np.abs(gcr[:, 1:]).sum()
-                    ),
-                    "n_nonzero_ac": int(
-                        (gy[:, 1:] != 0).sum()
-                        + (gcb[:, 1:] != 0).sum()
-                        + (gcr[:, 1:] != 0).sum()
-                    ),
-                    "flat_rgb_sum": int(
-                        fdec["pixels"].astype(np.int64).sum()
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows_for(uid: int) -> "list[dict]":
+        mcus_x = 1 + uid % 2
+        n_y = 4 * mcus_x
+        y = np.zeros((n_y, 64), dtype=np.int64)
+        cb = np.zeros((mcus_x, 64), dtype=np.int64)
+        cr = np.zeros((mcus_x, 64), dtype=np.int64)
+        for b in range(n_y):
+            y[b, 0] = ((uid * 5 + b * 17) % 401) - 200
+            for k in _JPEG_COLOR_Y_AC_POS:
+                y[b, k] = ((uid * 3 + b * 5 + k * 11) % 31) - 15
+        for b in range(mcus_x):
+            cb[b, 0] = ((uid * 3 + b * 7) % 201) - 100
+            cr[b, 0] = ((uid * 11 + b * 13) % 201) - 100
+            for k in _JPEG_COLOR_C_AC_POS:
+                cb[b, k] = ((uid * 7 + b * 3 + k * 5) % 21) - 10
+                cr[b, k] = ((uid * 13 + b * 3 + k * 5) % 21) - 10
+        dec = decode_jpeg_color(build_jpeg_color_from_coeffs(
+            y, cb, cr, mcus_x, 1, (2, 2),
+            restart_interval=2 if uid % 2 else 0,
+            quant_chroma=np.full(64, 2, dtype=np.uint8),
+        ))
+        gy, gcb, gcr = dec["zigzag_comps"]
+        fy = np.zeros((4, 64), dtype=np.int64)
+        fy[:, 0] = 8 * (uid % 256 - 128)
+        fdec = decode_jpeg_color(build_jpeg_color_from_coeffs(
+            fy,
+            np.zeros((1, 64), dtype=np.int64),
+            np.zeros((1, 64), dtype=np.int64),
+            1, 1, (2, 2),
+        ))
+        return [{
+            "width": dec["width"],
+            "height": dec["height"],
+            "sum_dc_y": int(gy[:, 0].sum()),
+            "sum_dc_cb": int(gcb[:, 0].sum()),
+            "sum_dc_cr": int(gcr[:, 0].sum()),
+            "sum_abs_ac_y": int(np.abs(gy[:, 1:]).sum()),
+            "sum_abs_ac_chroma": int(
+                np.abs(gcb[:, 1:]).sum() + np.abs(gcr[:, 1:]).sum()
+            ),
+            "n_nonzero_ac": int(
+                (gy[:, 1:] != 0).sum()
+                + (gcb[:, 1:] != 0).sum()
+                + (gcr[:, 1:] != 0).sum()
+            ),
+            "flat_rgb_sum": int(fdec["pixels"].astype(np.int64).sum()),
+        }]
 
-    return _widen_mid(users.select(id_col)).mapInPandas(
-        run, schema=schema
+    return _per_id_rows(
+        users, id_col,
+        ["width", "height", "sum_dc_y", "sum_dc_cb", "sum_dc_cr",
+         "sum_abs_ac_y", "sum_abs_ac_chroma", "n_nonzero_ac",
+         "flat_rgb_sum"],
+        rows_for, "mid",
     )
 
 
@@ -2862,59 +2769,31 @@ def jpeg_progressive_roundtrip_stats(
     progressive decoder against the baseline decoder on the identical
     coefficients — the two independent entropy paths must agree
     bit-exactly on every coefficient and pixel."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("width", T.LongType(), True),
-        T.StructField("height", T.LongType(), True),
-        T.StructField("sum_dc", T.LongType(), True),
-        T.StructField("blockweighted_dc", T.LongType(), True),
-        T.StructField("sum_abs_ac", T.LongType(), True),
-        T.StructField("n_nonzero_ac", T.LongType(), True),
-        T.StructField("n_newly_nonzero", T.LongType(), True),
-        T.StructField("matches_baseline", T.LongType(), True),
-    ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                bw_, bh_ = 2 + uid % 3, 1 + uid % 2
-                n = bw_ * bh_
-                zz = np.zeros((n, 64), dtype=np.int64)
-                for b in range(n):
-                    zz[b, 0] = ((uid * 7 + b * 13) % 401) - 200
-                    for k in _JPEG_FIXTURE_AC_POS:
-                        zz[b, k] = ((uid * 3 + b * 5 + k * 11) % 31) - 15
-                payload = build_jpeg_progressive_from_coeffs(zz, bw_, bh_)
-                dec = decode_jpeg_progressive(payload)
-                base = decode_jpeg_baseline(
-                    build_jpeg_from_coeffs(zz, bw_, bh_)
-                )
-                got = dec["zigzag"]
-                same = (
-                    np.array_equal(got, base["zigzag"])
-                    and np.array_equal(dec["pixels"], base["pixels"])
-                )
-                rows.append({
-                    id_col: uid,
-                    "width": dec["width"],
-                    "height": dec["height"],
-                    "sum_dc": int(got[:, 0].sum()),
-                    "blockweighted_dc": int(
-                        ((np.arange(n) + 1) * got[:, 0]).sum()
-                    ),
-                    "sum_abs_ac": int(np.abs(got[:, 1:]).sum()),
-                    "n_nonzero_ac": int((got[:, 1:] != 0).sum()),
-                    "n_newly_nonzero": int(
-                        (np.abs(got[:, 1:]) == 1).sum()
-                    ),
-                    "matches_baseline": int(same),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows_for(uid: int) -> "list[dict]":
+        bw_, bh_, zz = _jpeg_fixture_coeffs(uid)
+        dec = decode_jpeg_progressive(
+            build_jpeg_progressive_from_coeffs(zz, bw_, bh_)
+        )
+        base = decode_jpeg_baseline(build_jpeg_from_coeffs(zz, bw_, bh_))
+        got = dec["zigzag"]
+        same = (
+            np.array_equal(got, base["zigzag"])
+            and np.array_equal(dec["pixels"], base["pixels"])
+        )
+        return [{
+            "width": dec["width"],
+            "height": dec["height"],
+            **_zigzag_stats(got),
+            "n_newly_nonzero": int((np.abs(got[:, 1:]) == 1).sum()),
+            "matches_baseline": int(same),
+        }]
 
-    return _widen_mid(users.select(id_col)).mapInPandas(
-        run, schema=schema
+    return _per_id_rows(
+        users, id_col,
+        ["width", "height", "sum_dc", "blockweighted_dc", "sum_abs_ac",
+         "n_nonzero_ac", "n_newly_nonzero", "matches_baseline"],
+        rows_for, "mid",
     )
 
 
@@ -3029,46 +2908,31 @@ def avi_frame_sample_stats(
     per sampled frame with the exact reconstructed gray; any defect
     in RIFF chunk walking, idx/padding, the sampling map, or frame
     payload extraction shifts the closed-form replay."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("sample_idx", T.LongType(), False),
-        T.StructField("src_frame", T.LongType(), True),
-        T.StructField("n_frames", T.LongType(), True),
-        T.StructField("width", T.LongType(), True),
-        T.StructField("height", T.LongType(), True),
-        T.StructField("gray", T.LongType(), True),
-    ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                n = 3 + uid % 5
-                frames = []
-                for f in range(n):
-                    g = (uid * 29 + f * 37) % 256
-                    zz = np.zeros((2, 64), dtype=np.int64)
-                    zz[:, 0] = 8 * (g - 128)
-                    frames.append(build_jpeg_from_coeffs(zz, 2, 1))
-                payload = build_avi_mjpeg(frames, 16, 8)
-                parsed = parse_avi_frames(payload)
-                for i in range(k):
-                    src = (i * parsed["n_frames"]) // k
-                    dec = decode_jpeg_baseline(parsed["frames"][src])
-                    # DC-only block: every pixel reconstructs the gray
-                    gray = int(dec["pixels"][0, 0])
-                    rows.append({
-                        id_col: uid,
-                        "sample_idx": i,
-                        "src_frame": src,
-                        "n_frames": parsed["n_frames"],
-                        "width": parsed["width"],
-                        "height": parsed["height"],
-                        "gray": gray,
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows_for(uid: int) -> "list[dict]":
+        frames = []
+        for f in range(3 + uid % 5):
+            zz = np.zeros((2, 64), dtype=np.int64)
+            zz[:, 0] = 8 * ((uid * 29 + f * 37) % 256 - 128)
+            frames.append(build_jpeg_from_coeffs(zz, 2, 1))
+        parsed = parse_avi_frames(build_avi_mjpeg(frames, 16, 8))
+        rows = []
+        for i in range(k):
+            src = (i * parsed["n_frames"]) // k
+            dec = decode_jpeg_baseline(parsed["frames"][src])
+            rows.append({
+                "sample_idx": i,
+                "src_frame": src,
+                "n_frames": parsed["n_frames"],
+                "width": parsed["width"],
+                "height": parsed["height"],
+                # DC-only block: every pixel reconstructs the gray
+                "gray": int(dec["pixels"][0, 0]),
+            })
+        return rows
 
-    return _widen_mid(users.select(id_col)).mapInPandas(
-        run, schema=schema
+    return _per_id_rows(
+        users, id_col,
+        ["src_frame", "n_frames", "width", "height", "gray"],
+        rows_for, "mid", keys=("sample_idx",),
     )

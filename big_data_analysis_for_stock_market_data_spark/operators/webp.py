@@ -26,13 +26,16 @@ no shuffle, no driver traffic (see operators/multimodal.py header).
 from __future__ import annotations
 
 import heapq
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
+
+from big_data_analysis_for_stock_market_data_spark.operators.multimodal import (
+    _RGB_SUM_COLUMNS,
+    _per_id_rows,
+    _rgb_sums,
+)
 
 #: Storage order of the code-length-code lengths (spec section 6.2.2).
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13,
@@ -624,55 +627,19 @@ def webp_roundtrip_stats(
     sums plus a row-weighted sum must equal the closed-form replay;
     any defect in the Huffman forms, prefix coding, cache hashing, or
     the inverse transform shifts them."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("width", T.LongType(), True),
-        T.StructField("height", T.LongType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("rowweighted_r", T.LongType(), True),
-    ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uid in pdf[id_col]:
-                uid = int(uid)
-                h, w = 5 + uid % 6, 7 + uid % 8
-                y, x = np.mgrid[0:h, 0:w]
-                y_eff = np.where(y % 3 == 2, 0, y)
-                x_eff = np.where(y % 3 == 2, 0, x)
-                px = np.stack([
-                    (uid * 7 + y_eff * 31 + x_eff * 13) % 256,
-                    (uid * 5 + y_eff * 17 + x_eff * 29 + 71) % 256,
-                    (uid * 3 + y_eff * 13 + x_eff * 7 + 142) % 256,
-                    np.full((h, w), 255),
-                ], axis=2).astype(np.uint8)
-                payload = build_webp_lossless(
-                    px, subtract_green=True, cache_bits=4
-                )
-                dec = decode_webp_lossless(payload)
-                rows.append({
-                    id_col: uid,
-                    "width": int(dec.shape[1]),
-                    "height": int(dec.shape[0]),
-                    "sum_r": int(dec[:, :, 0].astype(np.int64).sum()),
-                    "sum_g": int(dec[:, :, 1].astype(np.int64).sum()),
-                    "sum_b": int(dec[:, :, 2].astype(np.int64).sum()),
-                    "rowweighted_r": int(
-                        (
-                            (np.arange(h)[:, None] + 1)
-                            * dec[:, :, 0].astype(np.int64)
-                        ).sum()
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows_for(uid: int) -> "list[dict]":
+        h, w = 5 + uid % 6, 7 + uid % 8
+        y, x = np.mgrid[0:h, 0:w]
+        y_eff = np.where(y % 3 == 2, 0, y)
+        x_eff = np.where(y % 3 == 2, 0, x)
+        px = np.stack([
+            (uid * 7 + y_eff * 31 + x_eff * 13) % 256,
+            (uid * 5 + y_eff * 17 + x_eff * 29 + 71) % 256,
+            (uid * 3 + y_eff * 13 + x_eff * 7 + 142) % 256,
+            np.full((h, w), 255),
+        ], axis=2).astype(np.uint8)
+        payload = build_webp_lossless(px, subtract_green=True, cache_bits=4)
+        return [_rgb_sums(decode_webp_lossless(payload))]
 
-    from big_data_analysis_for_stock_market_data_spark.operators import (
-        ensure_parallelism,
-    )
-
-    return ensure_parallelism(users.select(id_col)).mapInPandas(
-        run, schema=schema
-    )
+    return _per_id_rows(users, id_col, _RGB_SUM_COLUMNS, rows_for, "heavy")

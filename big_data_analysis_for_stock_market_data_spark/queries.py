@@ -17567,6 +17567,12 @@ _WINDOW_PRIORITY: tuple[str, ...] = (
     # (stock_fixture_daily_label, the eight stream_* entries,
     # w1_lag_label_parity, simsearch_pq_topk), which defer to the next
     # window.
+    # The one per-id codec harness (multimodal._per_id_rows, which now
+    # carries the webp/flac round-trip stages too) re-queues
+    # mm_webp_lossless_decode, mm_flac_native_decode and mm_audio_features
+    # next to the other codec entries; they displace the last three
+    # rolling-refresh entries (samp_stratified_docs, scd2_snapshot_asof,
+    # stock_closed_form_indicators), which defer to the next window.
     # All 50 slots are oracle-backed. The staleness gate (STALENESS.json)
     # must report every stale entry inside this window head.
     #
@@ -17602,6 +17608,9 @@ _WINDOW_PRIORITY: tuple[str, ...] = (
     "mm_jpeg_progressive_decode",
     "mm_avi_frame_sample",
     "mm_png_native_decode",
+    "mm_webp_lossless_decode",
+    "mm_flac_native_decode",
+    "mm_audio_features",
     # -- staleness-forced: the one-Python-pass stock features rewrote
     # indicators.recursive_enrich / _recursive_apply (also re-queues
     # ind_recursive_family and stock_feature_frame above) --
@@ -17629,9 +17638,6 @@ _WINDOW_PRIORITY: tuple[str, ...] = (
     "mv_incremental_pricing",
     "s_json_roundtrip",
     "s_orc_roundtrip",
-    "samp_stratified_docs",
-    "scd2_snapshot_asof",
-    "stock_closed_form_indicators",
 )
 
 

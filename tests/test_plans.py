@@ -390,11 +390,18 @@ def test_mm_python_fanout_is_size_aware(spark):
     # of Python workers (measured 2-7x slower at width 32 than width 1
     # for the light parsers at sf0.1). At the unit-test corpus size the
     # light paths stay at scan width: no RoundRobinPartitioning exchange
-    # in the wav/png plans at all.
+    # in the wav/png plans at all. One entry per remaining cost class:
+    # the 27 KB events file is under one mid floor (256 KiB), so the mid
+    # decoders stay at width 1 too, while the heavy decoders always take
+    # the session target (4 here).
     for name in ("mm_wav_native_decode", "mm_png_native_decode",
-                 "mm_container_headers"):
+                 "mm_container_headers", "mm_jpeg_color_decode",
+                 "mm_avi_frame_sample"):
         plan = P.explain_str(q(spark, name), "simple")
         assert "RoundRobinPartitioning" not in plan, (name, plan)
+    for name in ("mm_flac_native_decode", "mm_webp_lossless_decode"):
+        plan = P.explain_str(q(spark, name), "simple")
+        assert "RoundRobinPartitioning(4)" in plan, (name, plan)
 
 
 def test_ann_candidate_dedup_hash_aggregates(spark):
