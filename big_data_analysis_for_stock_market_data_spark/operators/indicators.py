@@ -392,7 +392,6 @@ def holt_linear(
     partition_by="symbol",
     order_by="date",
     col="close",
-    engine: str = "sequential",
 ) -> DataFrame:
     """Holt's linear-trend double exponential smoothing — the TWO-state
     recurrence (level, trend) the single-state EMA family can't express:
@@ -405,23 +404,11 @@ def holt_linear(
     evaluates ``a*y + oma*(l + b)`` and ``be*(l' - l) + omb*b`` with
     oma = 1-a, omb = 1-be computed once — mirror the same expression
     order in any recursive-CTE twin for bit-exact comparison (the
-    ind_parabolic_sar pattern). ``engine='sequential'`` (default) is the
-    bit-exact per-key applyInPandas fold; ``engine='scan'`` routes to
-    ``windows.holt_scan``, the 2x2 MATRIX-affine block scan whose
-    parallelism is rows/buckets instead of |keys| (numerically
-    equivalent, rel err ~1e-12 — test-pinned — not bit-identical), for
-    the few-keys/long-series shape."""
-    if engine not in ("sequential", "scan"):
-        raise ValueError("engine must be 'sequential' or 'scan'")
-    if engine == "scan":
-        from big_data_analysis_for_stock_market_data_spark.operators.windows import (
-            holt_scan,
-        )
-
-        return holt_scan(
-            df, alpha=alpha, beta=beta, partition_by=partition_by,
-            order_by=order_by, col=col,
-        )
+    ind_parabolic_sar pattern). This is the bit-exact per-key
+    applyInPandas fold; ``windows.holt_scan`` is its block-parallel twin
+    (parallelism rows/buckets instead of |keys|, numerically equivalent,
+    rel err ~1e-12 — test-pinned — not bit-identical) for the
+    few-keys/long-series shape."""
     oma = 1.0 - alpha
     omb = 1.0 - beta
 

@@ -1,12 +1,26 @@
-"""Window operators: label construction and rolling frames (SURVEY.md §2.5).
+"""Window operators (SURVEY.md §2.5) in three scan shapes.
 
-The reference builds its binary label with an **unpartitioned** window —
+**Keyed windows** (``label_buy_sell``, ``with_lag``/``with_lead``,
+``rolling``, the keyed ``prefix_sum``, ``forward_fill``): one hash shuffle
+on the partition key, then Spark's own window per key. The reference
+builds its binary label with an **unpartitioned** window —
 ``LAG(high) OVER (ORDER BY date)`` (``G_2_rf_nordd.py:36``) — which Spark
 executes by moving every row into a single partition (SURVEY.md §2.9-Q3):
-fine at 671 K rows, fatal at 100 TB. Every operator here therefore takes a
-``partition_by`` key (symbol, user, …). A global window remains available
-explicitly via ``partition_by=None`` for small frames, but the engine warns
-in the docstring rather than silently serializing the cluster.
+fine at 671 K rows, fatal at 100 TB. These operators therefore take a
+``partition_by`` key (symbol, user, …); ``partition_by=None`` remains
+available for small frames.
+
+**Two-phase bucketed scans** (``prefix_sum_multi``, ``global_lag_lead``,
+``rolling_apply_parallel``): rows are bucketed by deterministic quantile
+cuts of the order column (``compute_order_cuts``), each bucket runs its
+local pass in parallel, and a |buckets|-row summary stitches the bucket
+boundaries (offsets, neighbour values, or a ``lookback``-row halo).
+
+**The affine block scan** (``_affine_scan``; ``linear_recurrence``,
+``ema_scan``, ``recursive_scan_enrich``, ``holt_scan``): recurrences
+``s_i = M_i·s_{i-1} + u_i`` fold per (key, bucket) in parallel, and one
+summary row per bucket combines per key, so parallelism is
+rows/buckets instead of |keys|.
 
 Q1 (lag-vs-lead label bug): the reference's eight scripts alias
 ``LAG(high)`` — the *previous* row — as ``next_high`` and build the label
@@ -33,6 +47,12 @@ def _ordered_window(
     if isinstance(partition_by, str):
         partition_by = [partition_by]
     return Window.partitionBy(*partition_by).orderBy(order_by)
+
+
+def _key_list(partition_by: str | Sequence[str] | None) -> list[str]:
+    if partition_by is None:
+        return []
+    return [partition_by] if isinstance(partition_by, str) else list(partition_by)
 
 
 def label_buy_sell(
@@ -92,16 +112,10 @@ def with_lead(
     )
 
 
-def shuffle_partitions(df: DataFrame, default: int = 32) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, tolerating clusters
-    where the conf is non-numeric (e.g. ``"auto"`` under some AQE
-    setups): falls back to the DataFrame's current partition count."""
-    try:
-        return int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except (TypeError, ValueError):
-        return df.rdd.getNumPartitions() or default
+def shuffle_partitions(df: DataFrame) -> int:
+    """``spark.sql.shuffle.partitions`` of ``df``'s session as an int (Spark
+    rejects a non-integer value when the conf is set)."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
 def compute_order_cuts(df: DataFrame, order_by: str, n: int) -> list[float]:
@@ -149,10 +163,9 @@ def prefix_sum(
     partition_by: str | Sequence[str] | None = None,
     out_col: str | None = None,
     num_buckets: int | None = None,
-    exact_decimal: bool = True,
 ) -> DataFrame:
     """Distributed inclusive prefix sum (cumulative sum) in global or
-    per-key order.
+    per-key order, summed in decimal(28,8) and returned as double.
 
     With a ``partition_by`` key this is the plain per-key running-sum
     window — one hash shuffle on the key, parallelism = |keys|, no
@@ -161,64 +174,20 @@ def prefix_sum(
     and broadcast it, which for a high-cardinality key (user_id at
     100 TB) is a multi-GB broadcast to every executor.
 
-    The keyless (global-order) case uses the two-phase parallel scan:
-    bucket-local running sums in parallel, then each bucket shifted by the
-    cumulative total of its predecessors — an offsets frame of exactly
-    |buckets| rows (bounded by config, never by data), safely broadcast.
-    ``Window.orderBy(...)`` alone would compute this through ONE task.
-
-    With ``exact_decimal`` the re-association is exact (decimal addition
-    is associative), so either plan is bit-identical to the sequential
-    window."""
-    keys: list[str] = (
-        [] if partition_by is None
-        else [partition_by] if isinstance(partition_by, str)
-        else list(partition_by)
-    )
+    The keyless (global-order) case is ``prefix_sum_multi`` over the one
+    column. Decimal addition is associative, so either plan is
+    bit-identical to the sequential window."""
     out = out_col or f"cumsum_{value_col}"
-    val = (
-        F.col(value_col).cast("decimal(28,8)")
-        if exact_decimal else F.col(value_col)
-    )
-    if keys:
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(order_by)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        result = F.sum(val).over(w)
-        if exact_decimal:
-            result = result.cast("double")
-        return df.withColumn(out, result)
-
-    n = int(
-        num_buckets or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n))
-    local_w = (
-        Window.partitionBy("__bkt")
+    keys = _key_list(partition_by)
+    if not keys:
+        return prefix_sum_multi(df, [value_col], order_by, [out], num_buckets)
+    w = (
+        Window.partitionBy(*keys)
         .orderBy(order_by)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    d = d.withColumn("__local", F.sum(val).over(local_w))
-
-    totals = d.groupBy("__bkt").agg(F.sum(val).alias("__tot"))
-    off_w = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__bkt", F.sum("__tot").over(off_w).alias("__off")
-    )
-    d = d.join(F.broadcast(offsets), on=["__bkt"], how="left")
-    if exact_decimal:
-        # sum(decimal(28,8)) widens to (38,8); adding two of those would
-        # overflow precision 38 and Spark silently DROPS scale to 7 —
-        # quantizing the result. Cast back to (28,8) so the final addition
-        # stays at scale 8 (documented bound: |total| < 1e20).
-        local = F.col("__local").cast("decimal(28,8)")
-        off = F.coalesce(F.col("__off").cast("decimal(28,8)"), F.lit(0))
-        total = (local + off).cast("double")
-    else:
-        total = F.col("__local") + F.coalesce(F.col("__off"), F.lit(0))
-    return d.withColumn(out, total).drop("__bkt", "__local", "__off")
+    total = F.sum(F.col(value_col).cast("decimal(28,8)")).over(w)
+    return df.withColumn(out, total.cast("double"))
 
 
 def prefix_sum_multi(
@@ -227,25 +196,24 @@ def prefix_sum_multi(
     order_by: str,
     out_cols: Sequence[str] | None = None,
     num_buckets: int | None = None,
-    exact_decimal: bool = True,
 ) -> DataFrame:
     """Global-order inclusive prefix sums of SEVERAL columns in ONE
     two-phase parallel scan: one quantile bucket assignment, one
     bucket-local window pass carrying all the running sums, one
-    |buckets|-row totals aggregate, one offsets broadcast. Calling
-    ``prefix_sum`` k times costs k full scans + k broadcasts; this is the
-    fused form (the KS ECDF pair, multi-metric cumulative dashboards).
-    Same exactness contract as ``prefix_sum``."""
+    |buckets|-row totals aggregate, one offsets broadcast — each bucket
+    shifted by the cumulative total of its predecessors. The offsets frame
+    has exactly |buckets| rows (bounded by config, never by data), so it is
+    safely broadcast; ``Window.orderBy(...)`` alone would compute this
+    through ONE task. Calling the one-column form k times costs k full
+    scans + k broadcasts; this is the fused form (the KS ECDF pair,
+    multi-metric cumulative dashboards). Sums are decimal(28,8), so the
+    re-association is exact."""
     cols = list(value_cols)
     outs = list(out_cols) if out_cols else [f"cumsum_{c}" for c in cols]
     if len(outs) != len(cols):
         raise ValueError("out_cols must match value_cols")
-    n = int(
-        num_buckets or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-
-    def val(c):
-        return F.col(c).cast("decimal(28,8)") if exact_decimal else F.col(c)
+    n = num_buckets or shuffle_partitions(df)
+    vals = [F.col(c).cast("decimal(28,8)") for c in cols]
 
     d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n))
     local_w = (
@@ -253,10 +221,10 @@ def prefix_sum_multi(
         .orderBy(order_by)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    for i, c in enumerate(cols):
-        d = d.withColumn(f"__local{i}", F.sum(val(c)).over(local_w))
+    for i, v in enumerate(vals):
+        d = d.withColumn(f"__local{i}", F.sum(v).over(local_w))
     totals = d.groupBy("__bkt").agg(
-        *[F.sum(val(c)).alias(f"__tot{i}") for i, c in enumerate(cols)]
+        *[F.sum(v).alias(f"__tot{i}") for i, v in enumerate(vals)]
     )
     off_w = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.select(
@@ -267,15 +235,13 @@ def prefix_sum_multi(
     d = d.join(F.broadcast(offsets), on=["__bkt"], how="left")
     helpers = ["__bkt"]
     for i, out in enumerate(outs):
-        if exact_decimal:
-            local = F.col(f"__local{i}").cast("decimal(28,8)")
-            off = F.coalesce(F.col(f"__off{i}").cast("decimal(28,8)"), F.lit(0))
-            d = d.withColumn(out, (local + off).cast("double"))
-        else:
-            d = d.withColumn(
-                out,
-                F.col(f"__local{i}") + F.coalesce(F.col(f"__off{i}"), F.lit(0)),
-            )
+        # sum(decimal(28,8)) widens to (38,8); adding two of those would
+        # overflow precision 38 and Spark silently DROPS scale to 7 —
+        # quantizing the result. Cast back to (28,8) so the final addition
+        # stays at scale 8 (documented bound: |total| < 1e20).
+        local = F.col(f"__local{i}").cast("decimal(28,8)")
+        off = F.coalesce(F.col(f"__off{i}").cast("decimal(28,8)"), F.lit(0))
+        d = d.withColumn(out, (local + off).cast("double"))
         helpers += [f"__local{i}", f"__off{i}"]
     return d.drop(*helpers)
 
@@ -320,15 +286,11 @@ def rolling_apply_parallel(
 
     from pyspark.sql import types as T
 
-    keys: list[str] = (
-        [] if partition_by is None
-        else [partition_by] if isinstance(partition_by, str)
-        else list(partition_by)
+    keys = _key_list(partition_by)
+    npart = shuffle_partitions(df)
+    d = df.withColumn(
+        "__bkt", _quantile_buckets(df, order_by, num_buckets or npart, cuts=cuts)
     )
-    n = int(
-        num_buckets or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n, cuts=cuts))
 
     # One pass marks each bucket's last `lookback` rows and EXPLODES them
     # into (own bucket, next bucket as context) — no union of two plan
@@ -358,8 +320,7 @@ def rolling_apply_parallel(
         res = res[~res["__ctx"]]
         return res.drop(columns=drop_cols)
 
-    shuffle_n = shuffle_partitions(df)
-    d = d.repartition(shuffle_n, *[F.col(c) for c in [*keys, "__dst"]])
+    d = d.repartition(npart, *[F.col(c) for c in [*keys, "__dst"]])
     return d.groupBy(*keys, "__dst").applyInPandas(wrapper, out_schema)
 
 
@@ -397,10 +358,7 @@ def global_lag_lead(
     if kind not in ("lag", "lead"):
         raise ValueError(f"kind must be 'lag' or 'lead', got {kind!r}")
     out = out_col or f"{kind}_{value_col}"
-    n = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n = num_partitions or shuffle_partitions(df)
     d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n))
 
     local_w = Window.partitionBy("__bkt").orderBy(order_by)
@@ -458,85 +416,111 @@ def rolling(
     return out
 
 
-def linear_recurrence(
+def _affine_step(m, s, u):
+    """``m·s + u`` for one k-state step, summed left to right. The fold,
+    the per-key combine and the rowwise finalize (where the entries are
+    Columns) all go through it, so the three stages round identically."""
+    out = []
+    for r, ur in enumerate(u):
+        acc = m[r][0] * s[0]
+        for c in range(1, len(s)):
+            acc = acc + m[r][c] * s[c]
+        out.append(acc + ur)
+    return out
+
+
+def _affine_scan(
     df: DataFrame,
-    recurrences: "dict[str, tuple[Column, Column]]",
+    systems: "list[tuple[Sequence[str], list[list[Column]], list[Column]]]",
     order_by: str,
-    partition_by: str | Sequence[str],
-    num_buckets: int | None = None,
-    cuts: "list[float] | None" = None,
+    keys: list[str],
+    num_buckets: int | None,
+    cuts: "list[float] | None",
 ) -> DataFrame:
-    """Block-parallel affine scan: for each ``out -> (coef, input)`` entry,
-    computes ``y_i = coef_i * y_{i-1} + input_i`` per key in ``order_by``
-    order (seed ``y_{-1} = 0``; encode other seeds in the first row's
-    coef/input — see ``ema_scan``).
+    """Block-parallel affine scan. Each system ``(outs, M, u)`` is a k-state
+    recurrence ``s_i = M_i·s_{i-1} + u_i`` per key in ``order_by`` order,
+    seeded ``s_{-1} = 0`` (encode other seeds in the first row's M/u — a
+    zero M absorbs any carried state); ``M`` is k×k Columns, ``u`` is k
+    Columns, and state r is emitted as column ``outs[r]``.
 
-    This is the scalable execution of the recursive-indicator family
-    (EMA/KAMA/RSI are all affine in the carried state): the sequential
-    per-key pass has parallelism = |keys| — the documented worst case when
-    a few symbols hold millions of rows each. Affine maps compose
-    associatively (A2∘A1 = (c2·c1, c2·b1 + b2)), so the recurrence is a
-    segment scan with NO per-key total order anywhere:
+    The sequential per-key pass has parallelism = |keys| — the documented
+    worst case when a few symbols hold millions of rows each. Affine maps
+    compose associatively ((M2,u2)∘(M1,u1) = (M2·M1, M2·u1 + u2)), so the
+    recurrence is a segment scan with NO per-key total order anywhere:
 
-    1. deterministic order-range buckets from quantile cut points (the
-       ``prefix_sum``/``global_lag_lead`` trick — no row_number, so a
-       single giant key never serializes through one sort task);
+    1. deterministic order-range buckets from quantile cut points (no
+       row_number, so a single giant key never serializes through one
+       sort task); ``cuts`` is precomputed ``compute_order_cuts`` output —
+       without it the sketch re-executes ``df``'s upstream lineage once;
     2. each (key, bucket) folds locally IN PARALLEL, emitting per-row
-       partials (prefix coef-product ``P_i``, zero-seed partial ``B_i``);
+       partials (prefix product ``P_i`` of the M's, zero-seed state
+       ``B_i``);
     3. one summary row per bucket combines per key in bucket order — tiny;
-    4. ``y_i = P_i * y_start(bucket) + B_i`` finalizes rowwise.
+    4. ``s_i = P_i·s_start(bucket) + B_i`` finalizes rowwise.
 
-    The scanned frame is persisted (it feeds both the summary branch and
-    the final join; without it Spark re-runs the Python stage twice).
+    The scanned frame is persisted: it feeds both the summary branch and
+    the final join, and without it Spark re-runs the Python stage.
 
     Float caveat: the re-association is NOT bit-identical to the
     sequential fold (decimal exactness is impossible for products); it is
     numerically equivalent (|rel err| ~ 1e-12, tests pin it). Underflow of
-    ``P_i`` for long blocks is benign — a dead coefficient product means
-    the block start genuinely cannot influence those rows.
-    """
+    ``P_i`` for long blocks is benign — a dead product means the block
+    start genuinely cannot influence those rows."""
     import numpy as np
     import pandas as pd  # noqa: F401  (applyInPandas contract)
 
     from pyspark import StorageLevel
     from pyspark.sql import types as T
 
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    names = list(recurrences)
     npart = shuffle_partitions(df)
-    n_bkt = num_buckets or npart
-    # `cuts`: precomputed compute_order_cuts output — without it the
-    # bucket sketch re-executes df's full upstream lineage once (same
-    # contract as rolling_apply_parallel; at 100 TB that is a second
-    # full input pass)
-    d = df.withColumn("__bkt", _quantile_buckets(df, order_by, n_bkt, cuts=cuts))
-    for i, out in enumerate(names):
-        coef, inp = recurrences[out]
-        d = d.withColumn(f"__c{i}", coef.cast("double"))
-        d = d.withColumn(f"__b{i}", inp.cast("double"))
+    d = df.withColumn(
+        "__bkt", _quantile_buckets(df, order_by, num_buckets or npart, cuts=cuts)
+    )
+    dims = [len(outs) for outs, _, _ in systems]
+
+    def cols(tag: str, i: int) -> list[str]:
+        # system i's helper columns: M and P entries row-major (k*k);
+        # u, B and the bucket start state (k)
+        k = dims[i]
+        return [f"__{tag}{i}_{j}" for j in range(k * k if tag in "mp" else k)]
+
+    for i, (_, m, u) in enumerate(systems):
+        entries = [e for row in m for e in row] + list(u)
+        for name, e in zip(cols("m", i) + cols("u", i), entries):
+            d = d.withColumn(name, e.cast("double"))
+    part_cols = [c for tag in "pb" for i in range(len(dims)) for c in cols(tag, i)]
 
     block_schema = T.StructType(
         d.schema.fields
-        + [
-            T.StructField(f"__{p}{i}", T.DoubleType(), True)
-            for i in range(len(names))
-            for p in ("pp", "qq")
-        ]
+        + [T.StructField(c, T.DoubleType(), True) for c in part_cols]
     )
 
     def blockfn(pdf):
         pdf = pdf.sort_values(order_by, kind="mergesort")
-        for i in range(len(names)):
-            c = pdf[f"__c{i}"].to_numpy(dtype="float64")
-            b = pdf[f"__b{i}"].to_numpy(dtype="float64")
-            with np.errstate(under="ignore"):
-                pdf[f"__pp{i}"] = np.cumprod(c)
-            acc = 0.0
-            out = np.empty(len(b))
-            for j in range(len(b)):
-                acc = c[j] * acc + b[j]
-                out[j] = acc
-            pdf[f"__qq{i}"] = out
+        n = len(pdf)
+        for i, k in enumerate(dims):
+            m = pdf[cols("m", i)].to_numpy(dtype="float64").reshape(n, k, k)
+            u = pdf[cols("u", i)].to_numpy(dtype="float64")
+            p = np.empty((n, k, k))
+            q = np.empty((n, k))
+            if k == 1:
+                c, b = m[:, 0, 0], u[:, 0]
+                with np.errstate(under="ignore"):
+                    p[:, 0, 0] = np.cumprod(c)
+                acc = 0.0
+                for j in range(n):
+                    acc = c[j] * acc + b[j]
+                    q[j, 0] = acc
+            else:
+                pj, s = np.eye(k), [0.0] * k
+                for j in range(n):
+                    with np.errstate(under="ignore"):
+                        pj = m[j] @ pj
+                        s = _affine_step(m[j], s, u[j])
+                    p[j], q[j] = pj, s
+            for name, v in zip(cols("p", i) + cols("b", i),
+                               [*p.reshape(n, k * k).T, *q.T]):
+                pdf[name] = v
         return pdf
 
     # pin the block stage's partition count (same rationale as
@@ -548,53 +532,75 @@ def linear_recurrence(
         blockfn, schema=block_schema
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    # one summary row per bucket: the bucket's LAST (P, B) pair per entry
-    # (max_by on the order column — no rank needed)
+    # one summary row per bucket: the bucket's LAST (P, B) (max_by on the
+    # order column — no rank needed)
     ordk = F.col(order_by)
     summaries = scanned.groupBy(*keys, "__bkt").agg(
-        *[
-            F.max_by(F.col(f"__{p}{i}"), ordk).alias(f"__{p}{i}")
-            for i in range(len(names))
-            for p in ("pp", "qq")
-        ]
+        *[F.max_by(F.col(c), ordk).alias(c) for c in part_cols]
     )
-
     start_schema = T.StructType(
         summaries.schema.fields
-        + [T.StructField(f"__ss{i}", T.DoubleType(), True)
-           for i in range(len(names))]
+        + [T.StructField(c, T.DoubleType(), True)
+           for i in range(len(dims)) for c in cols("s", i)]
     )
 
     def combine(pdf):
         pdf = pdf.sort_values("__bkt", kind="mergesort")
-        for i in range(len(names)):
-            s = 0.0
-            starts = np.empty(len(pdf))
-            A = pdf[f"__pp{i}"].to_numpy(dtype="float64")
-            B = pdf[f"__qq{i}"].to_numpy(dtype="float64")
-            for j in range(len(pdf)):
+        n = len(pdf)
+        for i, k in enumerate(dims):
+            p = pdf[cols("p", i)].to_numpy(dtype="float64").reshape(n, k, k)
+            q = pdf[cols("b", i)].to_numpy(dtype="float64")
+            s = [0.0] * k
+            starts = np.empty((n, k))
+            for j in range(n):
                 starts[j] = s
-                s = A[j] * s + B[j]
-            pdf[f"__ss{i}"] = starts
+                s = _affine_step(p[j], s, q[j])
+            for name, v in zip(cols("s", i), starts.T):
+                pdf[name] = v
         return pdf
 
-    offsets = summaries.groupBy(*keys).applyInPandas(combine, schema=start_schema)
-    offsets = offsets.select(
-        *keys, "__bkt", *[f"__ss{i}" for i in range(len(names))]
-    )
+    offsets = summaries.groupBy(*keys).applyInPandas(
+        combine, schema=start_schema
+    ).select(*keys, "__bkt", *[c for i in range(len(dims)) for c in cols("s", i)])
 
     joined = scanned.join(offsets, on=[*keys, "__bkt"], how="left")
-    for i, out in enumerate(names):
-        joined = joined.withColumn(
-            out,
-            F.col(f"__pp{i}") * F.coalesce(F.col(f"__ss{i}"), F.lit(0.0))
-            + F.col(f"__qq{i}"),
-        )
-    drop = ["__bkt"] + [
-        f"__{p}{i}" for i in range(len(names))
-        for p in ("c", "b", "pp", "qq", "ss")
+    for i, (outs, _, _) in enumerate(systems):
+        k = dims[i]
+        p = [F.col(c) for c in cols("p", i)]
+        start = [F.coalesce(F.col(c), F.lit(0.0)) for c in cols("s", i)]
+        b = [F.col(c) for c in cols("b", i)]
+        state = _affine_step([p[r * k:(r + 1) * k] for r in range(k)], start, b)
+        for out, e in zip(outs, state):
+            joined = joined.withColumn(out, e)
+    return joined.drop(
+        "__bkt",
+        *[c for tag in "mupbs" for i in range(len(dims)) for c in cols(tag, i)],
+    )
+
+
+def linear_recurrence(
+    df: DataFrame,
+    recurrences: "dict[str, tuple[Column, Column]]",
+    order_by: str,
+    partition_by: str | Sequence[str],
+    num_buckets: int | None = None,
+    cuts: "list[float] | None" = None,
+) -> DataFrame:
+    """Block-parallel scalar affine scan: for each ``out -> (coef, input)``
+    entry, computes ``y_i = coef_i * y_{i-1} + input_i`` per key in
+    ``order_by`` order (seed ``y_{-1} = 0``; encode other seeds in the
+    first row's coef/input — see ``ema_scan``). All entries fold in one
+    ``_affine_scan`` pass, one 1×1 system each.
+
+    This is the scalable execution of the recursive-indicator family
+    (EMA/KAMA/RSI are all affine in the carried state); ``cuts`` and the
+    float caveat are ``_affine_scan``'s."""
+    systems = [
+        ((out,), [[coef]], [inp]) for out, (coef, inp) in recurrences.items()
     ]
-    return joined.drop(*drop)
+    return _affine_scan(
+        df, systems, order_by, _key_list(partition_by), num_buckets, cuts
+    )
 
 
 def ema_scan(
@@ -615,7 +621,7 @@ def ema_scan(
     groupBy-min + join on the key — an aggregate with map-side combine,
     NOT a per-key ordered window (which would re-introduce the one-task
     sort this engine exists to remove)."""
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
+    keys = _key_list(partition_by)
     mins = df.groupBy(*keys).agg(F.min(order_by).alias("__min_ord"))
     df = df.join(mins, on=keys, how="left")
     first = F.col(order_by) == F.col("__min_ord")
@@ -631,114 +637,6 @@ def ema_scan(
         num_buckets=num_buckets,
     )
     return out.drop("__min_ord")
-
-
-def kama_scan(
-    df: DataFrame,
-    n: int = 10,
-    fast: int = 2,
-    slow: int = 30,
-    partition_by: str | Sequence[str] = "symbol",
-    order_by: str = "date",
-    col: str = "close",
-    num_buckets: int | None = None,
-    out: str | None = None,
-) -> DataFrame:
-    """KAMA via the affine scan: the smoothing coefficient sc_i depends on
-    the DATA (efficiency ratio), not on the carried state, so the
-    recurrence ``y = (1−sc)·y_prev + sc·x`` is still affine and
-    block-parallelizes. Coefficients (rolling volatility, n-lag change)
-    come from one per-key JVM sort-window — a single codegen'd pass; the
-    serial part the scan removes is the per-key PYTHON fold. Numerically
-    equivalent to ``indicators.kama`` (rtol-level; the sequential engine
-    stays the bit-exact default)."""
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    out_col = out or f"kama{n}"
-    fast_sc = 2.0 / (fast + 1)
-    slow_sc = 2.0 / (slow + 1)
-    w = _ordered_window(order_by, keys)
-    fr = w.rowsBetween(-(n - 1), 0)
-    x = F.col(col)
-    rn = F.row_number().over(w)
-    adiff = F.abs(x - F.coalesce(F.lag(col, 1).over(w), x))
-    vol = F.sum(adiff).over(fr)
-    change = F.abs(x - F.lag(col, n).over(w))
-    er = (
-        F.when(rn <= n, F.lit(0.0))
-        .when(vol > 0, change / vol)
-        .otherwise(F.lit(0.0))
-    )
-    sc = F.pow(er * (fast_sc - slow_sc) + slow_sc, F.lit(2.0))
-    d = df.withColumn("__rn1", rn).withColumn("__sc", sc)
-    first = F.col("__rn1") == 1
-    res = linear_recurrence(
-        d,
-        {out_col: (
-            F.when(first, F.lit(0.0)).otherwise(1.0 - F.col("__sc")),
-            F.when(first, F.col(col)).otherwise(F.col("__sc") * F.col(col)),
-        )},
-        order_by=order_by, partition_by=keys, num_buckets=num_buckets,
-    )
-    return res.drop("__rn1", "__sc")
-
-
-def rsi_scan(
-    df: DataFrame,
-    n: int = 14,
-    partition_by: str | Sequence[str] = "symbol",
-    order_by: str = "date",
-    col: str = "close",
-    num_buckets: int | None = None,
-    out: str | None = None,
-) -> DataFrame:
-    """Wilder RSI via TWO affine scans in one pass (avg gain / avg loss,
-    alpha = 1/n, pandas ewm seeding: the first non-null delta seeds the
-    average). Division edge cases mirror the sequential engine: all-loss
-    frames → RSI 0 via the recurrence, zero-loss with gain → 100, flat
-    (0/0) → null, first row → null."""
-    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    out_col = out or f"rsi{n}"
-    alpha = 1.0 / n
-    w = _ordered_window(order_by, keys)
-    rn = F.row_number().over(w)
-    delta = F.col(col) - F.lag(col, 1).over(w)
-    gain = F.greatest(delta, F.lit(0.0))
-    loss = F.greatest(-delta, F.lit(0.0))
-    d = (
-        df.withColumn("__rn1", rn)
-        .withColumn("__g", gain)
-        .withColumn("__l", loss)
-    )
-    first2 = F.col("__rn1") <= 2
-    res = linear_recurrence(
-        d,
-        {
-            "__avg_gain": (
-                F.when(first2, F.lit(0.0)).otherwise(F.lit(1.0 - alpha)),
-                F.when(F.col("__rn1") == 1, F.lit(0.0))
-                .when(F.col("__rn1") == 2, F.col("__g"))
-                .otherwise(F.lit(alpha) * F.col("__g")),
-            ),
-            "__avg_loss": (
-                F.when(first2, F.lit(0.0)).otherwise(F.lit(1.0 - alpha)),
-                F.when(F.col("__rn1") == 1, F.lit(0.0))
-                .when(F.col("__rn1") == 2, F.col("__l"))
-                .otherwise(F.lit(alpha) * F.col("__l")),
-            ),
-        },
-        order_by=order_by, partition_by=keys, num_buckets=num_buckets,
-    )
-    ag, al = F.col("__avg_gain"), F.col("__avg_loss")
-    rsi = (
-        F.when(F.col("__rn1") == 1, F.lit(None).cast("double"))
-        .when((al == 0) & (ag > 0), F.lit(100.0))
-        .when((al == 0) & (ag == 0), F.lit(None).cast("double"))
-        .otherwise(100.0 - 100.0 / (1.0 + ag / al))
-    )
-    return (
-        res.withColumn(out_col, rsi)
-        .drop("__rn1", "__g", "__l", "__avg_gain", "__avg_loss")
-    )
 
 
 def recursive_scan_enrich(
@@ -778,7 +676,9 @@ def recursive_scan_enrich(
     Coefficient pre-columns (row number, RSI gains/losses, KAMA smoothing
     constants, true range, directional movements) come from ONE per-key
     JVM sort window — a single codegen'd pass; the serialization this
-    engine removes is the per-key PYTHON fold, as in ``kama_scan``.
+    engine removes is the per-key PYTHON fold. KAMA's smoothing constant
+    depends on the data (efficiency ratio), not on the carried state, so
+    its recurrence stays affine.
 
     The scan runs on a NARROW projection (keys, order, price, high/low)
     and joins results back on (keys, order) — the scanned frame crosses
@@ -788,9 +688,7 @@ def recursive_scan_enrich(
     ``cuts``: precomputed order cut points (compute_order_cuts) — without
     them each linear_recurrence pass sketches its own, re-executing the
     upstream lineage."""
-    keys = (
-        [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    )
+    keys = _key_list(partition_by)
     need_ohlc = bool(adx_ns) and all(
         c in df.columns for c in ("high", "low")
     )
@@ -837,7 +735,7 @@ def recursive_scan_enrich(
             )
             temps.append(nm)
 
-    # KAMA: data-dependent smoothing constant per n (kama_scan's form)
+    # KAMA: data-dependent smoothing constant per n (fast 2, slow 30)
     for n in kama_ns:
         fast_sc, slow_sc = 2.0 / (2 + 1), 2.0 / (30 + 1)
         fr = w.rowsBetween(-(n - 1), 0)
@@ -1140,10 +1038,9 @@ def holt_scan(
     num_buckets: int | None = None,
     cuts: "list[float] | None" = None,
 ) -> DataFrame:
-    """Holt's linear-trend smoothing via a 2x2 MATRIX-affine block scan —
-    the two-state generalization of ``linear_recurrence`` (which carries a
-    scalar). The (level, trend) state evolves as s_t = M s_{t-1} + u_t
-    with constant
+    """Holt's linear-trend smoothing (``indicators.holt_linear``) as one
+    2×2 system of ``_affine_scan``. The (level, trend) state evolves as
+    s_t = M s_{t-1} + u_t with constant
 
         M = [[1-a,        1-a      ],
              [be*(1-a)-be, be*(1-a)+(1-be)]]
@@ -1151,133 +1048,39 @@ def holt_scan(
 
     and the per-key seed row encoded as an absorbing step (M_1 = 0,
     u_1 = (y_1, 0)), so no block needs to know whether it holds the key's
-    first row — the zero matrix annihilates any carried state. Matrix
-    products compose associatively, so the same three-stage plan as
-    ``linear_recurrence`` applies: per-(key, bucket) local fold emitting
-    per-row prefix products P (4 doubles) and zero-seed partials B (2
-    doubles); one summary row per bucket; tiny per-key sequential combine
-    over bucket summaries; rowwise finalize s = P @ s_start + B.
+    first row — the zero matrix annihilates any carried state. The seed
+    flag comes from a groupBy-min + join on the key, not a per-key sort.
     Parallelism = rows/num_buckets, independent of |keys|.
 
-    Float caveat (same as linear_recurrence): re-association is
-    numerically equivalent (rel err ~1e-12, test-pinned), not
-    bit-identical to ``indicators.holt_linear`` — the sequential engine
-    remains the bit-exact default and the oracle-checked one."""
-    import numpy as np
-    import pandas as pd  # noqa: F401
+    Requires (keys, order_by) to be unique, as ``recursive_scan_enrich``
+    and ``global_lag_lead`` do: rows tied at a key's first order value
+    all seed, and under ties the sequential twin's output depends on
+    input order too.
 
-    from pyspark import StorageLevel
-    from pyspark.sql import types as T
-
-    keys = (
-        [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    )
+    Float caveat (``_affine_scan``'s): re-association is numerically
+    equivalent (rel err ~1e-12, test-pinned), not bit-identical to
+    ``indicators.holt_linear`` — the sequential engine remains the
+    bit-exact default and the oracle-checked one."""
+    keys = _key_list(partition_by)
     oma, omb = 1.0 - alpha, 1.0 - beta
-    m11, m12 = oma, oma
-    m21, m22 = beta * oma - beta, beta * oma + omb
-
-    npart = shuffle_partitions(df)
-    n_bkt = num_buckets or npart
     mins = df.groupBy(*keys).agg(F.min(order_by).alias("__min_ord"))
     d = df.join(mins, on=keys, how="left")
     first = F.col(order_by) == F.col("__min_ord")
-    d = d.withColumn("__first", first.cast("int"))
-    d = d.withColumn("__y", F.col(col).cast("double"))
-    d = d.withColumn("__bkt", _quantile_buckets(d, order_by, n_bkt, cuts=cuts))
+    y = F.col(col).cast("double")
+    zero = F.lit(0.0)
 
-    part_cols = ["__p11", "__p12", "__p21", "__p22", "__q1", "__q2"]
-    block_schema = T.StructType(
-        d.schema.fields
-        + [T.StructField(c, T.DoubleType(), True) for c in part_cols]
+    def m(v: float) -> Column:
+        return F.when(first, zero).otherwise(F.lit(v))
+
+    system = (
+        ("holt_level", "holt_trend"),
+        [[m(oma), m(oma)], [m(beta * oma - beta), m(beta * oma + omb)]],
+        [
+            F.when(first, y).otherwise(F.lit(alpha) * y),
+            F.when(first, zero).otherwise(F.lit(beta * alpha) * y),
+        ],
     )
-
-    def blockfn(pdf):
-        pdf = pdf.sort_values(order_by, kind="mergesort")
-        y = pdf["__y"].to_numpy(dtype="float64")
-        fr = pdf["__first"].to_numpy().copy()
-        # Rows tied at the per-key minimum order_by all carry __first=1.
-        # Equal order_by values hash to the same quantile bucket, so every
-        # tied row is in THIS block: keep only the first (stable-sort
-        # order) as the absorbing seed, demote the rest to regular rows —
-        # matching the sequential engine, which seeds exactly one row.
-        if fr.sum() > 1:
-            seed_idx = int(np.argmax(fr))
-            fr[:] = 0
-            fr[seed_idx] = 1
-        n = len(y)
-        out = {c: np.empty(n) for c in part_cols}
-        # P = identity, B = 0 before the block starts
-        p = np.eye(2)
-        b1 = b2 = 0.0
-        for j in range(n):
-            if fr[j]:
-                mj = np.zeros((2, 2))
-                u1, u2 = y[j], 0.0
-            else:
-                mj = np.array([[m11, m12], [m21, m22]])
-                u1, u2 = alpha * y[j], beta * alpha * y[j]
-            with np.errstate(under="ignore"):
-                p = mj @ p
-                nb1 = mj[0, 0] * b1 + mj[0, 1] * b2 + u1
-                nb2 = mj[1, 0] * b1 + mj[1, 1] * b2 + u2
-            b1, b2 = nb1, nb2
-            out["__p11"][j], out["__p12"][j] = p[0, 0], p[0, 1]
-            out["__p21"][j], out["__p22"][j] = p[1, 0], p[1, 1]
-            out["__q1"][j], out["__q2"][j] = b1, b2
-        for c in part_cols:
-            pdf[c] = out[c]
-        return pdf
-
-    d = d.repartition(npart, *[F.col(c) for c in keys], F.col("__bkt"))
-    scanned = d.groupBy(*keys, "__bkt").applyInPandas(
-        blockfn, schema=block_schema
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    ordk = F.col(order_by)
-    summaries = scanned.groupBy(*keys, "__bkt").agg(
-        *[F.max_by(F.col(c), ordk).alias(c) for c in part_cols]
-    )
-
-    start_schema = T.StructType(
-        summaries.schema.fields
-        + [T.StructField("__ss1", T.DoubleType(), True),
-           T.StructField("__ss2", T.DoubleType(), True)]
-    )
-
-    def combine(pdf):
-        import numpy as np
-
-        pdf = pdf.sort_values("__bkt", kind="mergesort")
-        s1 = s2 = 0.0
-        ss1 = np.empty(len(pdf))
-        ss2 = np.empty(len(pdf))
-        for j in range(len(pdf)):
-            ss1[j], ss2[j] = s1, s2
-            r = pdf.iloc[j]
-            with np.errstate(under="ignore"):
-                n1 = r["__p11"] * s1 + r["__p12"] * s2 + r["__q1"]
-                n2 = r["__p21"] * s1 + r["__p22"] * s2 + r["__q2"]
-            s1, s2 = n1, n2
-        pdf["__ss1"] = ss1
-        pdf["__ss2"] = ss2
-        return pdf
-
-    offsets = (
-        summaries.groupBy(*keys)
-        .applyInPandas(combine, schema=start_schema)
-        .select(*keys, "__bkt", "__ss1", "__ss2")
-    )
-
-    joined = scanned.join(offsets, on=[*keys, "__bkt"], how="left")
-    ss1 = F.coalesce(F.col("__ss1"), F.lit(0.0))
-    ss2 = F.coalesce(F.col("__ss2"), F.lit(0.0))
-    joined = joined.withColumn(
-        "holt_level",
-        F.col("__p11") * ss1 + F.col("__p12") * ss2 + F.col("__q1"),
-    ).withColumn(
-        "holt_trend",
-        F.col("__p21") * ss1 + F.col("__p22") * ss2 + F.col("__q2"),
-    ).withColumn("holt_fc1", F.col("holt_level") + F.col("holt_trend"))
-    return joined.drop(
-        "__bkt", "__first", "__y", "__min_ord", *part_cols, "__ss1", "__ss2"
-    )
+    out = _affine_scan(d, [system], order_by, keys, num_buckets, cuts)
+    return out.withColumn(
+        "holt_fc1", F.col("holt_level") + F.col("holt_trend")
+    ).drop("__min_ord")

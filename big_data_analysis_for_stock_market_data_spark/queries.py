@@ -17573,6 +17573,18 @@ _WINDOW_PRIORITY: tuple[str, ...] = (
     # next to the other codec entries; they displace the last three
     # rolling-refresh entries (samp_stratified_docs, scd2_snapshot_asof,
     # stock_closed_form_indicators), which defer to the next window.
+    # The one affine block scan (windows._affine_scan under
+    # linear_recurrence/holt_scan, the keyless prefix_sum folded into
+    # prefix_sum_multi, one shuffle_partitions read) re-queues the nine
+    # entries whose closures it changes and that no earlier block holds:
+    # w_ema_scan, w_prefix_sum, w1_scalable_global_lag,
+    # w_rolling_active_users, ml_auc_exact, ml_ks_2sample, ml_lift_table,
+    # stock_fixture_daily_label and stock_closed_form_indicators. They
+    # displace the last nine rolling-refresh entries
+    # (curate_docs_with_embeddings, dedup_simhash_near, fn_array_suite,
+    # ind_cci20, merge_latest_events, merge_scd2_history,
+    # mv_incremental_pricing, s_json_roundtrip, s_orc_roundtrip), which
+    # defer to the next window.
     # All 50 slots are oracle-backed. The staleness gate (STALENESS.json)
     # must report every stale entry inside this window head.
     #
@@ -17618,6 +17630,16 @@ _WINDOW_PRIORITY: tuple[str, ...] = (
     "ts_holt_linear",
     # -- staleness-forced: the r12 text.unigram_logprob rewrite --
     "text_unigram_logprob",
+    # -- staleness-forced: the one affine block scan in windows.py --
+    "w_ema_scan",
+    "w_prefix_sum",
+    "w1_scalable_global_lag",
+    "w_rolling_active_users",
+    "ml_auc_exact",
+    "ml_ks_2sample",
+    "ml_lift_table",
+    "stock_fixture_daily_label",
+    "stock_closed_form_indicators",
     # -- rolling refresh: the last 6 r03-latest oracle-backed --
     "q2_min_balance_supplier",
     "q11_important_parts",
@@ -17629,15 +17651,6 @@ _WINDOW_PRIORITY: tuple[str, ...] = (
     "a7_grouping_sets",
     "a8_summary_describe",
     "a9_corr_pairs",
-    "curate_docs_with_embeddings",
-    "dedup_simhash_near",
-    "fn_array_suite",
-    "ind_cci20",
-    "merge_latest_events",
-    "merge_scd2_history",
-    "mv_incremental_pricing",
-    "s_json_roundtrip",
-    "s_orc_roundtrip",
 )
 
 

@@ -1,8 +1,13 @@
-"""Oracle replay of the codec round-trip stages (operators/multimodal.py,
-webp.py, flac.py) and the container synthesis/parse chains.
+"""Oracle replay of two operator families at sf0.001:
 
-Each entry runs through the registry at sf0.001 and must match its DuckDB
-oracle on row count, column names and the order-insensitive value hash of
+- the codec round-trip stages (operators/multimodal.py, webp.py, flac.py)
+  and the container synthesis/parse chains;
+- the entries that run the window scans of operators/windows.py (the
+  affine block scan, the two-phase prefix sums, the bucketed global lag)
+  and the keyed prefix sum under the stock fixture.
+
+Each entry runs through the registry and must match its DuckDB oracle on
+row count, column names and the order-insensitive value hash of
 ``tools/check_correctness.py``. Both sides are fetched through pandas, the
 path the oracle replay compares.
 """
@@ -35,6 +40,17 @@ CODEC_ENTRIES = [
     "s_binaryfile_scan",
 ]
 
+WINDOW_ENTRIES = [
+    "w_ema_scan",
+    "w_prefix_sum",
+    "stock_fixture_daily_label",
+    "w1_scalable_global_lag",
+    "w_rolling_active_users",
+    "ml_auc_exact",
+    "ml_ks_2sample",
+    "ml_lift_table",
+]
+
 
 def _fingerprint(pdf) -> tuple[int, list[str], str]:
     cols = list(pdf.columns)
@@ -59,7 +75,7 @@ def oracle():
 @pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason=f"testdata missing: {SF_DIR}"
 )
-@pytest.mark.parametrize("name", CODEC_ENTRIES)
+@pytest.mark.parametrize("name", CODEC_ENTRIES + WINDOW_ENTRIES)
 def test_codec_entry_matches_oracle(spark, oracle, name):
     got = _fingerprint(entrymod.queries()[name](spark, SF_DIR).toPandas())
     want = _fingerprint(oracle.execute(entrymod.oracle_sql()[name]).df())

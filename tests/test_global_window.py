@@ -201,12 +201,17 @@ def test_ema_scan_matches_pandas_ewm(spark):
         assert abs(got[i][1] - ref26[i]) <= 1e-9 * max(1.0, abs(ref26[i]))
 
 
+def _scan_only(df, **family):
+    # one indicator of recursive_scan_enrich's family, the rest switched off
+    off = dict(ema_spans=(), macd_pairs=(), rsi_ns=(), kama_ns=(), adx_ns=())
+    return win_ops.recursive_scan_enrich(df, order_by="t", **{**off, **family})
+
+
 def test_kama_scan_matches_sequential_kama(spark):
     import numpy as np
     from pyspark.sql import Row
 
     from big_data_analysis_for_stock_market_data_spark.operators.indicators import kama
-    from big_data_analysis_for_stock_market_data_spark.operators.windows import kama_scan
 
     rng = np.random.default_rng(21)
     xs = np.cumsum(rng.normal(0.0, 1.0, 600)) + 100.0
@@ -216,7 +221,7 @@ def test_kama_scan_matches_sequential_kama(spark):
     want = {r.t: r.kama10
             for r in kama(df, n=10, order_by="t").collect()}
     got = {r.t: r.kama10
-           for r in kama_scan(df, n=10, order_by="t", num_buckets=7).collect()}
+           for r in _scan_only(df, kama_ns=(10,), num_buckets=7).collect()}
     assert len(got) == 600
     for t in range(600):
         assert abs(got[t] - want[t]) <= 1e-9 * max(1.0, abs(want[t])), t
@@ -227,7 +232,6 @@ def test_rsi_scan_matches_sequential_rsi(spark):
     from pyspark.sql import Row
 
     from big_data_analysis_for_stock_market_data_spark.operators.indicators import rsi
-    from big_data_analysis_for_stock_market_data_spark.operators.windows import rsi_scan
 
     rng = np.random.default_rng(22)
     xs = np.cumsum(rng.normal(0.0, 1.0, 500)) + 100.0
@@ -236,7 +240,7 @@ def test_rsi_scan_matches_sequential_rsi(spark):
     )
     want = {r.t: r.rsi14 for r in rsi(df, n=14, order_by="t").collect()}
     got = {r.t: r.rsi14
-           for r in rsi_scan(df, n=14, order_by="t", num_buckets=6).collect()}
+           for r in _scan_only(df, rsi_ns=(14,), num_buckets=6).collect()}
     assert got[0] is None and (want[0] is None or want[0] != want[0])
     for t in range(1, 500):
         assert abs(got[t] - want[t]) <= 1e-9 * max(1.0, abs(want[t])), t

@@ -434,3 +434,56 @@ def test_ann_candidate_dedup_hash_aggregates(spark):
                     and ("hashpartitioning" in blk
                          or "rangepartitioning" in blk)):
                 assert not vec_cols.search(blk), (name, blk)
+
+
+def _plan_ancestors(lines: list[str], i: int) -> list[str]:
+    """Operator names from line ``i``'s parent up to the root of a
+    ``simple`` plan, read off the column of each ``+-``/``:-`` marker."""
+    import re
+
+    def depth(line: str) -> int:
+        m = re.search(r"[+:]- ", line)
+        return m.start() if m else -1
+
+    d_i = depth(lines[i])
+    names = []
+    for line in reversed(lines[:i]):
+        d = depth(line)
+        if d < d_i:
+            names.append(re.match(r"\w*", line[d + 3:] if d >= 0 else line).group())
+            d_i = d
+            if d < 0:
+                break
+    return names
+
+
+def test_affine_scan_folds_once_within_exchange_budget(spark):
+    # The affine block scan (windows._affine_scan) behind the EMA entry
+    # and the 2x2 Holt scan: at most 6 exchanges each (counted with the
+    # cached subtree printed under both readers), and the per-(key,
+    # bucket) fold runs once — every blockfn node sits under the
+    # persisted frame's InMemoryRelation, so the summary branch and the
+    # final join read the cache instead of re-running the Python stage.
+    # An earlier run of the same plan in this session would leave its
+    # cache materialized, and an executed cached plan prints its initial
+    # and final forms (twice the exchanges), so start from an empty cache.
+    from big_data_analysis_for_stock_market_data_spark.operators import windows as W
+
+    spark.catalog.clearCache()
+    ev = Q.load(spark, SF, "events")
+    frames = {
+        "w_ema_scan": q(spark, "w_ema_scan"),
+        "holt_scan": W.holt_scan(
+            ev, partition_by="user_id", order_by="ts", col="value", num_buckets=8
+        ),
+    }
+    for name, df in frames.items():
+        assert P.count_shuffles(df) <= 6, name
+        lines = P.explain_str(df, "simple").splitlines()
+        folds = [
+            i for i, line in enumerate(lines)
+            if "FlatMapGroupsInPandas" in line and "blockfn(" in line
+        ]
+        assert folds, name
+        for i in folds:
+            assert "InMemoryRelation" in _plan_ancestors(lines, i), (name, lines[i])
